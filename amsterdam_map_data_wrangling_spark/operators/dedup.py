@@ -308,7 +308,11 @@ def minhash_near_dup_pairs(
     ``collapse_exact=False`` keeps the naive single-pass composition
     (shingle → sign → band over every row) as the opt-out for A/B
     measurement; ``expand_pairs`` is ignored there (the output is
-    already pair-level)."""
+    already pair-level).
+
+    Precondition: ``id_col`` is unique in ``df``. The collapse fetches
+    each representative's text by an equi-join on its min id, so a
+    repeated id would duplicate representative rows."""
     if not collapse_exact:
         sig = minhash_signatures(shingle_hashes(df, id_col, text_col, w), k)
         return lsh_candidate_pairs(sig, k, bands).filter(
@@ -322,9 +326,8 @@ def minhash_near_dup_pairs(
     # both clone-pair join legs, and both expansion membership legs) —
     # without a lineage cut each one re-scans the corpus and re-runs
     # the md5 (the r15 sf1 sweep measured the uncut form ~1.9x). The
-    # checkpointed frame is (id, 32-char md5) ONLY: the text rides a
-    # single min_by through the one collapse shuffle and never enters
-    # the checkpoint. Callers that already hold a checkpointed
+    # checkpointed frame is (id, 32-char md5) ONLY: the text never
+    # enters the checkpoint. Callers that already hold a checkpointed
     # (id, fingerprint_cs) relation (e.g. the dedup_minhash_pairs gate,
     # whose exact-recall invariant builds the identical frame) pass it
     # as ``fingerprints`` to skip this scan entirely.
@@ -390,7 +393,7 @@ def expand_rep_pairs(
     est_jaccard)`` contract — shared by both minhash hash families
     (:func:`minhash_near_dup_pairs` and the portable gate plan).
 
-    ``fp``: (id, _t, _f) per input row; ``reps``: (id, _t, _f, ...) one
+    ``fp``: (id, _f) per input row; ``reps``: (id, _t, _f, ...) one
     row per distinct fingerprint with id = cluster-min; ``pairs``:
     (id_a, id_b, est_jaccard) between representative ids.
 

@@ -332,6 +332,11 @@ def decontaminate(
             .select("id")
             .distinct()
         )
+    elif len(contaminated_ids.columns) != 1:
+        raise ValueError(
+            "contaminated_ids must have exactly one column (the doc id), "
+            f"got {contaminated_ids.columns}"
+        )
     contaminated = contaminated_ids.select(
         F.col(contaminated_ids.columns[0]).alias("id")
     )

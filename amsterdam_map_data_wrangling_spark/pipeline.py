@@ -187,20 +187,3 @@ def run_pipeline(
         finally:
             raw.unpersist()
     return out
-
-
-def audit_sizes(paths: list[str]) -> list[tuple[str, float]]:
-    """S6 file-size audit (``:245-246``): (path, MiB) per input/output.
-    Driver-side metadata check, deliberately not a plan operator."""
-    out = []
-    for p in paths:
-        if os.path.isdir(p):
-            size = sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(p)
-                for f in fs
-            )
-        else:
-            size = os.path.getsize(p)
-        out.append((p, size / 1024 / 1024))
-    return out

@@ -65,297 +65,36 @@ def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [dfs[n] for n in names]
 
 
-def _load_all() -> None:
-    """Import every query module so registration side effects run."""
-    from amsterdam_map_data_wrangling_spark.plans import (  # noqa: F401
-        dedup,
-        features,
-        geo,
-        multimodal,
-        queries,
-        r08_queue,
-        similarity,
-        sketches,
-        sparse,
-        text,
-        windows,
-        wrangling,
-    )
-
-
-#: Driver-gate priority: the correctness artifact records the FIRST 50
-#: registry entries, so ordering is evidence policy, not cosmetics. Front of
-#: the list: (a) queries with no driver verdict in the previous round's
-#: artifact, (b) queries whose implementation changed this round, (c) new
-#: queries. The complement (stable, previously hash-green) rotates to the
-#: back and re-enters in a later round. Names listed here must exist in the
-#: registry (typo guard in _ordered); registered queries not listed append
-#: in registration order.
-#:
-#: Capacity math (150 is the saturation CEILING; N = 148 as of r18:
-#: 150 − 5 retirements + 2 operator gates + 1 never-gated overflow):
-#: 100 verdict slots exist per 2 rounds, so with N > 100 a bounded
-#: tail of at most (N − 100) UNCHANGED queries ages to 3 rounds (never
-#: beyond; must hold a verdict from two artifacts back; parked
-#: immediately past slot 50) — enforced mechanically by
-#: tests/test_gate_freshness.py plus the oracle-definition ledger
-#: (ORACLE_HASHES.json).
-#:
-#: SATURATION DECISION (round 8, recorded per the r07 verdict ask and
-#: SURVEY §8): register ALL 24 queue pairs — the catalog lands exactly
-#: at N = 150 and the rotation becomes a permanent 3-round cycle with
-#: zero registration slack. Rationale: the queue families (drift, A/B,
-#: retention, spatial, basket, concentration, ...) are breadth a user
-#: of this engine would actually run, and rounds 9+ pivot to perf and
-#: depth work that needs no new gate slots. If a must-register operator
-#: ever appears, RETIRE a weak query for its slot rather than exceed
-#: the ceiling.
-#:
-#: RETIREMENT, exercised once at r08 (the mechanism above, made real):
-#: the r7 verdict asked for a driver-gated crawl-ingestion query
-#: "window permitting" — the window didn't permit, so the policy's
-#: escape hatch ran instead. `ilike_filter_count` (hash-green r01-r06;
-#: the lowest-marginal-evidence gate — a one-flag variant of
-#: like_filter_count, ILIKE semantics still pytest-compared in
-#: tests/test_retired.py) left the registry; `warc_roundtrip_stats`
-#: (plans/multimodal.py — the real _parse_warc against a string-algebra
-#: oracle) took a front slot; N stays exactly 150. One queue pair
-#: (gap_log2_hist, whose event-gap family already holds the gated
-#: event_gap_stats) waits one round as the bounded never-gated overflow
-#: parked at slot 51 — the retirement freed exactly one r09 front slot
-#: for it (49 r06-greens + gap_log2_hist = 50).
-#:
-#: Standing 3-round cycle (each round's 50 slots are owed in full to
-#: the cohort whose verdicts turn 3 rounds old):
-#:   r08 front = 26 r05-parks + 23 queue + warc_roundtrip_stats
-#:   r09 front = (OWED: gap_log2_hist + 49 r06-greens — round 9
-#:               stalled with zero commits, so the driver re-gated the
-#:               r08 front verbatim; CORRECTNESS_r09 == CORRECTNESS_r08
-#:               key-for-key)
-#:   r10 front = the owed r09 front, one round late
-#:   r11 front = the 50 r07-greens (pre-parked at r10's slots 51-100)
-#:   r12 front = the r08 front again (with the spatial_radius_pairs →
-#:               geo_way_lengths retirement swap)
-#:   r13 front = the r10 front again
-#:   r14 front = the r11 front again (with the three r14 oracle
-#:               re-contracts)
-#:   r15 front = the r12 front again (with the two r15 re-contracts)
-#:   r16 front = the r13 front again
-#:   r17 front = the r14 front again (section (v) below, with the
-#:               ann_rand_lsh → bound_doc_width_roundtrip retirement
-#:               swap)
-#:   r18 front = the r15 front again (with the five retirement swaps
-#:               and five entrants of section (ac)'s predecessor)
-#:   r19 front = the r16 cohort park + the jpeg_pixel_stats overflow +
-#:               two r18-optimization-changed queries in the spare
-#:               slots (changed-code rule), and so on.
-#: The r09 stall means BOTH parked cohorts exceeded the age-3 ceiling
-#: in wall-clock rounds; recovery is the fastest mathematically
-#: possible (oldest cohort first, the other parked immediately behind).
-#: tests/test_gate_freshness.py encodes the stalled-round recovery
-#: clause: a duplicated artifact collapses to one rotation window, so
-#: the ceiling is measured in distinct gate windows.
-#: Changed-code queries always jump their cohort into the next front,
-#: displacing an unchanged name one cycle later — the ledger test
-#: catches any verdict whose oracle definition drifted.
-_GATE_PRIORITY: list[str] = [
-    # ---- round 19 rotation: front (slots 1-50) ----
-    # (ac) the 47 r16-front queries (the r10/r13 lineage cohort minus
-    #     the three adaptive-window levers fronted at r18), owed this
-    #     round's window in full (verdicts r16, three distinct windows
-    #     back after this round's gates), in their r16 gate order;
-    #     PLUS the never-gated r18 overflow jpeg_pixel_stats (first in
-    #     line per policy point 3); PLUS — in the two spare slots — two
-    #     of the r18-optimization-changed queries fronted out of cycle
-    #     per the changed-code rule and the r18 VERDICT's #9 ask (the
-    #     r18 driver sample covered none of the 15 changed paths):
-    #       near_dup_transitivity — the shared-pair-memo threshold-floor
-    #         rewrite's largest beneficiary (2.04 -> 0.45 s);
-    #       geo_nn_on_sphere — the packed-decimal top-1 aggregate +
-    #         row-count repartition window (the most structurally
-    #         changed plan of the round).
-    #     The remaining 13 r18-changed queries hold r17 verdicts and
-    #     re-front with their cohort at r20 (two windows back — within
-    #     the ceiling). NO retirements this round (an optimization
-    #     round must not drop queries); N stays 148.
-    "dedup_keep_canonical",
-    "dedup_edit_refine",
-    "audio_dims",
-    "video_dims",
-    "count_global",
-    "distinct_users_union",
-    "custkeys_intersect",
-    "custkeys_except",
-    "topk_group_distinct",
-    "topk_group_count",
-    "topk_order_limit",
-    "like_filter_count",
-    "scan_filter_project",
-    "pct_shares",
-    "runtime_bloom_filter_join",
-    "local_supplier_volume",
-    "semi_join_active_customers",
-    "anti_join_inactive_customers",
-    "weekly_cohort_retention",
-    "key_skew_profile",
-    "zorder_layout_stats",
-    "asof_last_click_before_error",
-    "interval_overlap_balances",
-    "above_avg_orders_per_customer",
-    "segment_event_counts",
-    "gap_log2_hist",
-    "cms_heavy_hitters",
-    "text_stats",
-    "term_freq_topk",
-    "bigram_topk",
-    "lang_id_confusion",
-    "chunk_documents_udtf",
-    "repetition_stats",
-    "benchmark_contamination",
-    "mixture_proportional_sample",
-    "dup_span_coverage",
-    "tumbling_window_stats",
-    "sliding_window_by_type",
-    "interval_join_click_error",
-    "json_props_stats",
-    "value_percentiles_by_type",
-    "equi_depth_histogram",
-    "expectations_report",
-    "python_datasource_stats",
-    "nested_json_shred",
-    "snapshot_table_diff",
-    "map_ops_surface",
-    "jpeg_pixel_stats",
-    "near_dup_transitivity",
-    "geo_nn_on_sphere",
-    # ---- window boundary (slot 50) ----
-    # (ad) park: the 48 remaining r17-front queries (minus the two
-    #     fronted above), in their r17 gate order — their verdict
-    #     window is r17, two distinct windows back after this round's
-    #     front gates; parked immediately past the window so they are
-    #     r20's front. NO oracle changes touch this cohort this round.
-    "dedup_exact_groups",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_pairs",
-    "dedup_clusters",
-    "dedup_minhash_portable_pairs",
-    "dedup_simhash_bands",
-    "sorted_neighborhood_window",
-    "near_dup_pagerank",
-    "incremental_dedup_stats",
-    "leakage_free_split",
-    "winsorize_price_stats",
-    "robust_z_by_priority",
-    "unigram_lm_scores",
-    "weighted_sample_per_group",
-    "ols_price_trend_by_priority",
-    "geo_haversine_radius",
-    "multimodal_features",
-    "multimodal_dims",
-    "audio_levels",
-    "image_pixel_stats",
-    "star_join_customers_by_region",
-    "range_join_balance_bands",
-    "gap_sessionization",
-    "nation_volume_shipping",
-    "knn_cosine_brute",
-    "ann_sign_lsh",
-    "bound_doc_width_roundtrip",
-    "ann_ivf",
-    "embedding_near_dup_pairs",
-    "ann_sq8_rerank",
-    "ann_pq_adc",
-    "sketch_users_by_type",
-    "sketch_value_quantiles",
-    "sparse_cosine_pairs",
-    "bloom_vocab_overlap",
-    "decontaminate_stats",
-    "bm25_search",
-    "quality_filter_pipeline",
-    "tfidf_top_terms",
-    "token_budget_pack_sharded",
-    "pii_redaction_stats",
-    "dup_span_removal",
-    "resample_locf_daily",
-    "trailing_window_revenue",
-    "salted_join_hot_customer",
-    "variant_json_stats",
-    "null_semantics_audit",
-    "xml_roundtrip_stats",
-    # (ae) the 50 r18-front queries (verdicts r18, the freshest
-    #     cohort) are deliberately unlisted — they append in
-    #     registration order behind the park and become r21's front:
-    #     geo_way_lengths, ..., compaction_plan_ffd.
-]
-
-
-
-
-def _ordered() -> dict[str, QuerySpec]:
-    _load_all()
-    missing = [n for n in _GATE_PRIORITY if n not in QUERIES]
-    if missing:
-        raise KeyError(f"_GATE_PRIORITY names not in registry: {missing}")
-    out: dict[str, QuerySpec] = {n: QUERIES[n] for n in _GATE_PRIORITY}
-    for name, spec in QUERIES.items():
-        if name not in out:
-            out[name] = spec
-    return out
-
-
 def queries() -> dict[str, Build]:
-    return {name: spec.build for name, spec in _ordered().items()}
+    return {name: spec.build for name, spec in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         name: spec.oracle
-        for name, spec in _ordered().items()
+        for name, spec in QUERIES.items()
         if spec.oracle is not None
     }
 
 
 def catalog_markdown() -> str:
-    """Deterministic one-line-per-query index of the registry, in gate
-    order — regenerate QUERIES.md with
+    """Deterministic one-line-per-query index of the registry, in
+    registration order — regenerate QUERIES.md with
     ``python -c "from amsterdam_map_data_wrangling_spark.plans.catalog
     import catalog_markdown; print(catalog_markdown(), end='')" >
     QUERIES.md``; tests/test_catalog_doc.py fails if the file drifts."""
-    specs = _ordered()
     lines = [
         "# Query catalog (generated — do not edit by hand)",
         "",
-        f"{len(specs)} registered queries, listed in gate order (the "
-        f"driver's correctness artifact records the first 50). Every "
-        f"query carries a DuckDB value oracle.",
+        f"{len(QUERIES)} registered queries, listed in registration "
+        f"order. Every query carries a DuckDB value oracle.",
         "",
         "| # | query | doc |",
         "|---|---|---|",
     ]
-    for i, (name, spec) in enumerate(specs.items(), 1):
+    for i, (name, spec) in enumerate(QUERIES.items(), 1):
         doc = (spec.doc or "").strip().replace("\n", " ")
         first = doc.split(". ")[0].rstrip(".") + "." if doc else ""
         first = first.replace("|", "\\|")
         lines.append(f"| {i} | `{name}` | {first} |")
     return "\n".join(lines) + "\n"
-
-
-def oracle_hash(sql: str) -> str:
-    """Whitespace-normalized sha256 prefix of an oracle SQL string — the
-    unit of the ORACLE_HASHES.json freshness ledger (r6 ADVICE #2:
-    record a hash of each query's oracle so the freshness test can
-    mechanically reject a stale verdict whose gate definition changed
-    after the verdict was earned). Whitespace-insensitive so pure
-    reformatting does not force a re-gate; any token change does."""
-    import hashlib
-
-    return hashlib.sha256(" ".join(sql.split()).encode()).hexdigest()[:16]
-
-
-def oracle_hashes_snapshot() -> dict[str, str]:
-    """Current {query: oracle_hash} for every oracle-gated query."""
-    return {
-        name: oracle_hash(spec.oracle)
-        for name, spec in _ordered().items()
-        if spec.oracle is not None
-    }

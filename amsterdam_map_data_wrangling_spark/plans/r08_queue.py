@@ -1,15 +1,9 @@
-r"""Round-8 registration queue: 24 (build, oracle) pairs VALIDATED in
-round 7 but deliberately NOT registered — round 7 closed with the gate
-window exactly at its capacity-math balance, and these 24 are sized as
-an EXACT FILL of the r08 front next to the 26-name r05-green park
-(26 + 24 = 50; saturation analysis at plans/catalog.py:_GATE_PRIORITY —
-registering all 24 caps the catalog at N = 150 in a permanent 3-round
-re-gate cycle). This module is not imported by catalog._load_all;
-tests/test_r08_queue.py keeps every pair hash-green against DuckDB at
-both SFs (plus a plan-invariant scan with the BNLJ_OK 1-row-stitch
-whitelist) so round 8 can register by adding @query decorators +
-rotation entries + BNLJ_WHITELIST entries + an ORACLE_HASHES.json "8"
-snapshot only.
+r"""24 (build, oracle) pairs kept in the ``QUEUE`` dict and registered
+into the catalog at import (``_register`` at the bottom of the module).
+Like every registered query, each one is compared with DuckDB by the two
+oracle sweeps (tests/test_queries_oracle.py at sf0.01,
+tests/test_queries_oracle_small_sf.py at sf0.001);
+tests/test_r08_queue_edges.py runs a robustness sweep over ``QUEUE``.
 
 Float-gate conventions as the registered catalog (plans/catalog.py
 module docstring); the exactness DESIGN choices specific to this queue
@@ -2101,12 +2095,10 @@ QUEUE["gap_log2_hist"] = (gap_hist_build, GAP_HIST_ORACLE)
 
 
 # ---------------------------------------------------------------------------
-# Round-8 registration (the move this queue existed for): every validated
-# (build, oracle) pair enters the live catalog. catalog._load_all imports
-# this module, so the registry sees all 24; _GATE_PRIORITY fronts them next
-# to the 26-name r05-green park (exact 50-slot fill — capacity math at
-# plans/catalog.py:_GATE_PRIORITY). The QUEUE dict stays exported for
-# tests/test_r08_queue_edges.py's robustness sweep.
+# Registration: every (build, oracle) pair enters the live catalog. The
+# plans package __init__ imports this module, so the registry sees all
+# 24. The QUEUE dict stays exported for tests/test_r08_queue_edges.py's
+# robustness sweep.
 # ---------------------------------------------------------------------------
 def _register() -> None:
     from amsterdam_map_data_wrangling_spark.plans.catalog import query

@@ -2,10 +2,8 @@
 
 ``dropDuplicates`` on the content fingerprint inside a stream keeps only
 the first occurrence across ALL micro-batches — the streaming twin of
-``operators/dedup.exact_dedup_groups``. With a watermark +
-``dropDuplicatesWithinWatermark`` the dedup state is bounded to the
-watermark horizon (the production shape for an unbounded crawl feed: exact
-dedup within the horizon, MinHash batch jobs beyond it).
+``operators/dedup.exact_dedup_groups``. Its state grows with the number
+of distinct fingerprints seen.
 """
 
 from __future__ import annotations
@@ -19,15 +17,3 @@ from amsterdam_map_data_wrangling_spark.functions.text import fingerprint
 def dedup_stream(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Unbounded-state exact dedup: first writer of each fingerprint wins."""
     return docs.withColumn("fp", fingerprint(F.col(text_col))).dropDuplicates(["fp"])
-
-
-def dedup_stream_within_watermark(
-    docs: DataFrame, ts_col: str, text_col: str = "text", horizon: str = "1 hour"
-) -> DataFrame:
-    """Watermark-bounded exact dedup: duplicates are suppressed only within
-    the event-time horizon, so state size is bounded at any input rate."""
-    return (
-        docs.withColumn("fp", fingerprint(F.col(text_col)))
-        .withWatermark(ts_col, horizon)
-        .dropDuplicatesWithinWatermark(["fp"])
-    )

@@ -87,19 +87,6 @@ def sliding_counts_by_type_stream(
     )
 
 
-def session_counts_stream(
-    events: DataFrame, gap: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming twin of ``session_window_per_user`` (stateful session
-    merge; watermark bounds open-session state)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("num_events"))
-        .select(F.col("w.start").alias("session_start"), "user_id", "num_events")
-    )
-
-
 def run_to_memory(df: DataFrame, name: str, output_mode: str = "complete") -> None:
     """Drain a streaming query into an in-memory table with an
     availableNow trigger (test/verification harness). ``complete`` suits

@@ -16,10 +16,6 @@ from .conftest import SF_ORACLE
 
 
 def _plan(spark, name: str) -> str:
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _load_all
-
-    _load_all()  # registration is import-driven; -k runs must not rely
-    # on another test having imported every plan module
     df = QUERIES[name].build(spark, SF_ORACLE)
     return df._jdf.queryExecution().executedPlan().toString()
 

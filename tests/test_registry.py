@@ -54,101 +54,15 @@ def test_oracle_checked_queries_are_non_vacuous(spark, name):
     assert QUERIES[name].build(spark, SF_ORACLE).count() > 0
 
 
-def test_gate_priority_orders_catalog():
-    """The driver's correctness artifact records the first 50 registry
-    entries, so catalog order is evidence policy: the _GATE_PRIORITY names
-    must lead (in order), every priority name must exist, and nothing may
-    be dropped or duplicated by the reordering."""
-    from amsterdam_map_data_wrangling_spark.plans import catalog
-
+def test_entry_exposes_catalog_in_registration_order():
+    """__spark_entry__ is the public entry point: it must expose every
+    registered query once, in registration order, and the oracle of each
+    query that has one."""
     import __spark_entry__
 
-    ordered = list(catalog.queries())
-    assert ordered[: len(catalog._GATE_PRIORITY)] == catalog._GATE_PRIORITY
-    # the DRIVER reads __spark_entry__, which must expose the same ordering
-    # (a local queries() shadowing the catalog's once silently undid it)
-    assert list(__spark_entry__.queries()) == ordered
-    assert len(ordered) == len(set(ordered)) == len(catalog.QUERIES)
-    # round-19 evidence policy: the r16-front cohort minus the three
-    # levers fronted at r18 (the oldest — its last DISTINCT verdict
-    # window is r16, three windows back after this round's gates)
-    # takes the front, plus the never-gated r18 overflow
-    # jpeg_pixel_stats, plus — in the two spare slots — two of the 15
-    # r18-optimization-changed query paths (the r18 driver sample
-    # covered none of them; r18 VERDICT #9): near_dup_transitivity
-    # (memo threshold floor) and geo_nn_on_sphere (packed-decimal
-    # top-1 + row-count repartition window). The 48 remaining
-    # r17-front queries park at slots 51-98 (r20's front); the
-    # freshly-gated r18 cohort appends unlisted at 99-148 (r21's
-    # front). (The general freshness invariant is asserted
-    # mechanically in tests/test_gate_freshness.py — this pins only
-    # the current round's specific obligations.)
-    import json
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parent.parent
-    r16 = set(json.loads((repo / "CORRECTNESS_r16.json").read_text()))
-    r17 = set(json.loads((repo / "CORRECTNESS_r17.json").read_text()))
-    r18 = set(json.loads((repo / "CORRECTNESS_r18.json").read_text()))
-    retired_r18 = {
-        "dedup_minhash_portable",
-        "dedup_simhash_portable",
-        "dedup_cluster_size_hist",
-        "neardup_degree_hist",
-        "quality_components",
+    names = list(__spark_entry__.queries())
+    assert names == list(QUERIES)
+    assert len(names) == len(set(names))
+    assert set(__spark_entry__.oracle_sql()) == {
+        n for n, s in QUERIES.items() if s.oracle
     }
-    fronted_levers = {
-        "session_window_per_user",
-        "event_gap_stats",
-        "funnel_conversion",
-    }
-    fronted_r18_changed = {"near_dup_transitivity", "geo_nn_on_sphere"}
-    assert set(ordered[:50]) == (r16 - fronted_levers) | {
-        "jpeg_pixel_stats"
-    } | fronted_r18_changed, (
-        "round-19 window must be the 47 r16-front queries (minus the "
-        "levers already re-gated at r18) plus the jpeg_pixel_stats "
-        "overflow plus the two fronted r18-changed queries"
-    )
-    assert set(ordered[50:98]) == r17 - fronted_r18_changed, (
-        "the 48 remaining r17-front queries must park at slots 51-98 "
-        "(r20's front)"
-    )
-    assert set(ordered[98:]) == r18, (
-        "the freshly-gated r18 cohort appends at slots 99-148"
-    )
-    assert "ilike_filter_count" not in ordered  # retired at r08
-    assert "ann_rand_lsh" not in ordered  # retired at r17
-    for q in retired_r18:
-        assert q not in ordered  # retired at r18
-
-
-def test_package_init_registers_every_query_module():
-    """bench.py (and any `from ...plans.queries import QUERIES` user)
-    relies on the package __init__'s import list for registration side
-    effects; catalog._load_all is the other copy of that list. They must
-    name the SAME modules — round 11 found `geo` present in _load_all but
-    missing from __init__, silently shrinking bench.py's catalog to 148."""
-    import ast
-    import inspect
-
-    from amsterdam_map_data_wrangling_spark import plans
-    from amsterdam_map_data_wrangling_spark.plans import catalog
-
-    def imported_names(source: str) -> set[str]:
-        names: set[str] = set()
-        for node in ast.walk(ast.parse(source)):
-            if (
-                isinstance(node, ast.ImportFrom)
-                and node.module == "amsterdam_map_data_wrangling_spark.plans"
-            ):
-                names |= {a.name for a in node.names}
-        return names
-
-    init_mods = imported_names(inspect.getsource(plans))
-    load_all_mods = imported_names(
-        inspect.getsource(catalog._load_all)
-    )
-    assert load_all_mods <= init_mods, (
-        f"plans/__init__.py is missing {load_all_mods - init_mods}"
-    )

@@ -79,6 +79,7 @@ def test_retired_are_not_registered(spark):
         ("dedup_cluster_size_hist", "session_window_per_user"),
         ("neardup_degree_hist", "event_gap_stats"),
         ("quality_components", "funnel_conversion"),
+        ("ann_rand_lsh", "bound_doc_width_roundtrip"),
     ]:
         assert retired not in QUERIES
         assert occupant in QUERIES  # the slot's new occupant

@@ -203,6 +203,20 @@ def test_decontaminate_removes_exactly_the_overlapping_docs(spark):
     assert len(kept) == 31 - 2
 
 
+def test_decontaminate_rejects_multi_column_contaminated_ids(spark):
+    """``contaminated_ids`` is read by position, so a relation with more
+    than one column must be refused rather than silently keyed on its
+    first column."""
+    from amsterdam_map_data_wrangling_spark.operators.sparse import (
+        decontaminate,
+    )
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    ids = spark.createDataFrame([(1, 7)], "doc_id long, other long")
+    with pytest.raises(ValueError, match="exactly one column"):
+        decontaminate(docs, docs, contaminated_ids=ids)
+
+
 def test_bloom_blocks_rejects_oversized_n_hashes(spark):
     """r6 ADVICE regression: md5 hex is 32 chars = four 8-char slices;
     a 5th hash position would slice past the digest and conv() NULLs
