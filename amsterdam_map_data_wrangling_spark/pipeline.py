@@ -15,26 +15,23 @@ declarative DataFrame transformations:
   tags always, to way tags only when ``clean_ways=True`` (the reference
   cleans nodes only — quirk P10; documented intent cleans uniformly)
 - P11 row-shape dispatch      → one parsed DataFrame per kind, persisted,
-  feeding 2 (node) / 3 (way) child outputs — the Spark analog of the
-  reference's single scan feeding 5 sinks
+  feeding 2 (node) / 3 (way) child outputs; the node and way chains run
+  concurrently, one thread each, so the two single-task XML parses
+  overlap instead of queueing (the reference's single scan feeds 5 sinks)
 - S3 multi-sink write         → Parquet (canonical, columnar) or headered
   CSV in the reference's exact field order (byte-compat export)
 
 Everything is built-in Column expressions — zero Python UDFs — so the whole
 shape stage is one WholeStageCodegen pipeline per output.
-
-Scale note (100 TB): each output table is written partitioned by the hash of
-``id`` (parquet file parallelism follows the input partitioning); the EAV
-tags tables are additionally bucketable by ``id`` for co-located tag↔entity
-joins, and ``ways_nodes`` is written sorted within partitions by
-``(id, position)`` so ordered graph expansion reads sequentially.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -152,11 +149,20 @@ def run_pipeline(
     """The full ETL (reference ``process_map``, ``:206-236``): parse once
     per element kind, shape, and write all five tables.
 
-    Each raw parse is persisted before its child writes so the XML is read
-    once per kind (2 scans total vs the reference's 1 — but each scan feeds
-    its sinks from cache; Spark would otherwise re-parse per action, §4 of
-    SURVEY.md). ``fmt="csv"`` writes headered CSVs in the reference's exact
-    field order (timestamps re-formatted to ISO-8601 Z).
+    The node chain and the way chain run concurrently, one Python thread
+    per kind. Each chain parses its kind once, persists the parse so its
+    2 (node) or 3 (way) writes read it from cache instead of re-parsing
+    per action (§4 of SURVEY.md), reads each written table back, and
+    unpersists in ``finally``. A single OSM document parses as one task,
+    so running the chains one after the other would leave all but one
+    core idle. Both threads inherit the caller's local properties (job
+    group, scheduler pool) and job tags, so the ETL's jobs stay
+    attributed to the caller's group. If a chain raises, the first error
+    is re-raised once both chains have finished, and neither chain's
+    cache is left behind.
+
+    ``fmt="csv"`` writes headered CSVs in the reference's exact field
+    order (timestamps re-formatted to ISO-8601 Z).
 
     ``partition_tags_by_type=True`` writes the EAV tags tables partitioned
     by the ``type`` namespace column (SURVEY §4): queries shaped like the
@@ -164,8 +170,9 @@ def run_pipeline(
     partition's files — partition pruning at the source, which at 100 TB
     is the difference between scanning 3% and 100% of the tag data.
     """
-    out: dict[str, DataFrame] = {}
-    for kind, shaper in (("node", shape_nodes), ("way", shape_ways)):
+
+    def chain(kind: str, shaper) -> dict[str, DataFrame]:
+        out: dict[str, DataFrame] = {}
         raw = read_osm(spark, osm_path, kind).persist()
         try:
             for name, df in shaper(raw, cfg).items():
@@ -183,7 +190,25 @@ def run_pipeline(
                     if partition_tags_by_type and name.endswith("_tags"):
                         writer = writer.partitionBy("type")
                     writer.parquet(path)
-                out[name] = spark.read.format(fmt).option("header", True).load(path)
+                reader = spark.read.format(fmt)
+                if fmt == "csv":
+                    # The writer quotes an empty string and leaves a null
+                    # unquoted; the default nullValue "" would read both
+                    # back as null. XML cannot hold U+0000, so no OSM value
+                    # is taken for this null marker.
+                    reader = reader.option("header", True).option("nullValue", "\u0000")
+                out[name] = reader.load(path)
         finally:
             raw.unpersist()
-    return out
+        return out
+
+    kinds = (("node", shape_nodes), ("way", shape_ways))
+    # One wrapper per thread: each captures its own copy of the caller's
+    # local properties, so the threads never share one mutable set.
+    with ThreadPoolExecutor(len(kinds)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(chain), kind, shaper)
+            for kind, shaper in kinds
+        ]
+    # leaving the ``with`` waited for both chains; re-raise the first error
+    return {name: df for f in futures for name, df in f.result().items()}

@@ -11,7 +11,12 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from amsterdam_map_data_wrangling_spark.pipeline import COMPAT, shape_nodes, shape_ways
+from amsterdam_map_data_wrangling_spark.pipeline import (
+    COMPAT,
+    run_pipeline,
+    shape_nodes,
+    shape_ways,
+)
 from amsterdam_map_data_wrangling_spark.plans.osm_workload import (
     OSM_WORKLOAD,
     register_osm_views,
@@ -77,3 +82,27 @@ def test_reference_published_counts(spark, shaped):
     (Readme.md:164-165; shipped CSVs) must fall out of the same SQL."""
     got = run_workload(spark, ["count_ways"])["count_ways"].first().cnt
     assert got == 22391
+
+
+def test_workload_on_pipeline_output_matches_duckdb(spark, tmp_path):
+    """Every README statement over ``run_pipeline``'s parquet output, via
+    ``spark.sql`` and via DuckDB over the same files. Needs only the
+    fixture, so it runs on every host. Defined last in this module: it
+    re-registers the views the ``shaped`` fixture registered."""
+    tables = run_pipeline(spark, FIXTURE, str(tmp_path))
+    register_osm_views(tables)
+    con = duckdb.connect()
+    for name in tables:
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM "
+            f"read_parquet('{tmp_path / name}/*.parquet')"
+        )
+    for name, sdf in run_workload(spark).items():
+        s_cols, s_rows = sdf.columns, [tuple(r) for r in sdf.collect()]
+        rel = con.sql(OSM_WORKLOAD[name])
+        d_cols, d_rows = list(rel.columns), rel.fetchall()
+        assert sorted(s_cols) == sorted(d_cols), name
+        assert s_rows, f"{name} is empty on the fixture"
+        assert rows_canonical(s_cols, s_rows) == rows_canonical(d_cols, d_rows), name
+    assert con.sql(OSM_WORKLOAD["count_nodes"]).fetchone() == (9,)
+    assert con.sql(OSM_WORKLOAD["count_ways"]).fetchone() == (3,)

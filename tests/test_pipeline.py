@@ -12,7 +12,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from amsterdam_map_data_wrangling_spark import pipeline
 from amsterdam_map_data_wrangling_spark.pipeline import (
+    _FIELD_ORDER,
+    _TS_FORMAT,
     COMPAT,
     ShapeConfig,
     run_pipeline,
@@ -194,3 +197,80 @@ def test_multi_file_osm_read(spark):
     nodes = read_osm(spark, multi_dir, "node")
     assert nodes.count() == 18  # 9 per file
     assert nodes.rdd.getNumPartitions() >= 2  # one split per file minimum
+
+
+def _expected_tables(spark, fmt="parquet"):
+    """The five tables as ``shape_nodes`` / ``shape_ways`` build them over
+    ``read_osm(FIXTURE)``; for CSV, as the strings the export writes."""
+    want = {
+        **shape_nodes(read_osm(spark, FIXTURE, "node")),
+        **shape_ways(read_osm(spark, FIXTURE, "way")),
+    }
+    if fmt == "csv":
+        for name, df in want.items():
+            if "timestamp" in df.columns:
+                df = df.withColumn("timestamp", F.date_format("timestamp", _TS_FORMAT))
+            want[name] = df.select(
+                *(F.col(c).cast("string") for c in _FIELD_ORDER[name])
+            )
+    return want
+
+
+@pytest.mark.parametrize(
+    "fmt,partition_tags_by_type",
+    [("parquet", False), ("parquet", True), ("csv", False)],
+    ids=["parquet", "parquet-partitioned-tags", "csv"],
+)
+def test_run_pipeline_rows_equal_shaped_tables(spark, tmp_path, fmt, partition_tags_by_type):
+    """Every written table holds exactly the rows the shapers produce:
+    equal counts and no row left over by ``exceptAll`` either way."""
+    got = run_pipeline(
+        spark, FIXTURE, str(tmp_path), fmt=fmt,
+        partition_tags_by_type=partition_tags_by_type,
+    )
+    want = _expected_tables(spark, fmt)
+    assert list(got) == list(want)
+    for name, g in got.items():
+        w = want[name].select(*g.columns)
+        assert g.count() == w.count() > 0, name
+        assert g.exceptAll(w).isEmpty(), name
+        assert w.exceptAll(g).isEmpty(), name
+
+
+def test_run_pipeline_jobs_inherit_caller_job_group(spark, tmp_path):
+    """Both chain threads run their jobs in the caller's job group: the
+    group holds at least one write job per table, and no job of the run
+    lands outside it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("etl-probe", "run_pipeline job-group probe")
+    try:
+        run_pipeline(spark, FIXTURE, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    writes = [
+        j for j in tracker.getJobIdsForGroup("etl-probe")
+        if any(
+            tracker.getStageInfo(s).name.startswith("parquet at")
+            for s in tracker.getJobInfo(j).stageIds
+        )
+    ]
+    assert len(writes) >= len(_FIELD_ORDER)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
+def test_run_pipeline_chain_failure_reraises_and_uncaches(spark, tmp_path, monkeypatch):
+    """A failing chain's error reaches the caller after both chains have
+    finished, and neither chain leaves its cached parse behind."""
+
+    def broken(raw, cfg):
+        raise RuntimeError("way shaping failed")
+
+    monkeypatch.setattr(pipeline, "shape_ways", broken)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="way shaping failed"):
+        run_pipeline(spark, FIXTURE, str(tmp_path))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # the node chain still ran to completion
+    assert spark.read.parquet(str(tmp_path / "nodes_tags")).count() > 0
