@@ -1,134 +1,171 @@
-"""Scan-parallelism floor for CPU-dense derivations.
-
-The complement of :mod:`.compaction` (which fixes too-MANY-files): this
-fixes too-FEW-splits. A parquet file is splittable only at row-group
-boundaries, so a single-file, single-row-group table scans as ONE task
-no matter how many cores the cluster has — and every narrow expression
-chained onto that scan (tokenize → n-gram → md5 fan-out, per-row regex,
-JSON parse, vector math) serializes onto one core until the first
-shuffle. For IO-bound scans that's invisible (the byte read is the
-cost); for CPU-dense derivations the compute is 10-100x the byte read,
-and the under-split layout caps throughput at 1/N of the machine.
-Measured at the 10x scale point (PLANS.md round-11): a one-row-group
-documents table made the whole text family 3-7x slower than the same
-bytes split 32 ways.
-
-``cpu_parallel_floor`` inserts one round-robin repartition above the
-scan — but only inside the window where it pays:
-
-- input smaller than ``min_bytes``: skip. The work fits one task's
-  worth of CPU; a shuffle would cost more than it buys (measured net
-  NEGATIVE at sf0.1, where per-query time is stage-latency-bound).
-- input at least ``target x maxPartitionBytes``: skip. A splittable
-  format already yields >= target scan tasks at that size — this is
-  the 100 TB case, where the floor must (and does) stay out of the
-  way. (Caveat: a non-splittable format — one giant gzip — defeats
-  this guard; such inputs should go through the ranged readers in
-  ``sources/warc_split.py`` instead.)
-
-Catalyst pushes column pruning and predicate pushdown THROUGH the
-repartition (verified in tests/test_layout_floor.py), so the shuffle
-carries only the pruned, filtered columns — for a text pipeline that is
-the text column it was about to burn CPU on anyway, moved once.
+"""Data-adaptive layout decisions: every plan choice made from a table's
+files rather than its rows. Each decision takes the table's path, reads
+metadata only (a file listing, or the parquet footers through
+``sources/fs.py``'s budgeted reader) and answers with the plan to take;
+an unknown answer selects the plan that is safe at any scale. The twins
+a decision picks between are value-identical (each site names the test
+that pins it), so a wrong answer costs speed, never correctness.
 """
 
 from __future__ import annotations
 
-import os
+from pyarrow import fs as pafs
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from pyspark.sql import DataFrame
+from amsterdam_map_data_wrangling_spark.sources.fs import (
+    parquet_col_max,
+    parquet_col_null_frac,
+    parquet_nonempty_row_groups,
+    parquet_num_rows,
+    pyarrow_fs_for,
+)
 
-#: below this input size the shuffle costs more than the parallelism
-#: buys (sf0.1-scale inputs, measured); chosen so the driver's sf0.1
-#: gate/bench data (documents 0.6 MB, orders 2.6 MB) stays un-floored
-#: while 10x-scale inputs (documents 6.8 MB, orders 15 MB) fire.
+#: key NULL fraction below which the one-partition-per-key window plans
+#: win (at 50% NULL they ran 2.5-6.3x slower than the chunked twins)
+DENSE_KEY_MAX_NULL_FRAC = 0.10
+#: widest row (chars) for the single-row text plans: a 48 MB row is one
+#: task (1.1-8.4x); the segmented twins re-scan the table (~2x if narrow)
+WIDE_ROW_CHARS = 65_536
+#: rows from which a quadratic-fan-out self-join repartitions its cells
+#: (below: < ~6M pairs, < 1 s on one core; the exchange cost 0.6 s)
+FANOUT_REPARTITION_ROWS = 50_000
+#: rows from which a per-row Python kernel (~130 us/row) repays an exchange
+KERNEL_REPARTITION_ROWS = 2_000
+#: rows per Python task: 500 rows (~65 ms) keep ~20 ms setup under a third
+KERNEL_ROWS_PER_TASK = 500
+#: bytes below which the scan floor's shuffle costs more than it buys
+#: (sf0.1 documents 0.6 MB, orders 2.6 MB stay below; 10x twins fire)
 DEFAULT_MIN_BYTES = 4 * 1024 * 1024
 
 
-#: byte-suffix multipliers as Spark's ByteUnit parses them (binary, and
-#: a bare number means bytes for this conf)
-_BYTE_SUFFIXES = {
-    "": 1,
-    "b": 1,
-    "k": 1024,
-    "kb": 1024,
-    "m": 1024**2,
-    "mb": 1024**2,
-    "g": 1024**3,
-    "gb": 1024**3,
-    "t": 1024**4,
-    "tb": 1024**4,
-    "p": 1024**5,
-    "pb": 1024**5,
-}
-
-
-def _max_partition_bytes(spark) -> int:
-    """``spark.sql.files.maxPartitionBytes`` as bytes, honoring Spark's
-    unit suffixes ('128m', '1g', ...). An unparseable value falls back to
-    the 128 MiB default rather than being digit-stripped — '128m' read as
-    128 BYTES would permanently trip the upper guard and silently disable
-    the floor (round-11 ADVICE)."""
-    raw = str(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    ).strip().lower()
-    num = raw.rstrip("bkmgtp")
-    suffix = raw[len(num):]
+def _parquet_file_sizes(path: str) -> "list[int]":
+    """Sizes of the parquet files under ``path`` (one file, or a
+    directory tree) on any scheme ``sources/fs.pyarrow_fs_for``
+    resolves, from one metadata listing; [] when it cannot be listed."""
     try:
-        return int(num) * _BYTE_SUFFIXES[suffix]
-    except (ValueError, KeyError):
-        return 134217728
+        filesystem, p = pyarrow_fs_for(path)
+        info = filesystem.get_file_info(p)
+        if info.type == pafs.FileType.File:
+            return [info.size]
+        tree = filesystem.get_file_info(pafs.FileSelector(p, recursive=True))
+        return [i.size for i in tree if i.is_file and i.path.endswith(".parquet")]
+    except (OSError, ValueError):  # pyarrow's IO and URI errors
+        return []
 
 
 def input_bytes_of_path(path: str) -> int:
-    """File bytes under a parquet path (file or directory), metadata only."""
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+    """Bytes of the parquet files under ``path``; 0 when it cannot be
+    listed."""
+    return sum(_parquet_file_sizes(path))
 
 
-def cpu_parallel_floor(
-    df: DataFrame,
-    *,
-    input_bytes: int | None = None,
-    min_bytes: int = DEFAULT_MIN_BYTES,
-    target: int | None = None,
-) -> DataFrame:
-    """Repartition ``df`` to ``target`` (default: cluster parallelism)
-    when its input layout under-splits a CPU-dense scan; no-op outside
-    the paying window (see module doc).
+def key_is_dense(path: str, key: str) -> bool:
+    """True (the one-partition-per-key window plan) when ``key``'s NULL
+    fraction is known and below ``DENSE_KEY_MAX_NULL_FRAC``; False (the
+    chunked plan) otherwise."""
+    nf = parquet_col_null_frac(path, key)
+    return nf is not None and nf < DENSE_KEY_MAX_NULL_FRAC
 
-    ``input_bytes``: pass the known file-bytes when the caller has the
-    path (the loader does); otherwise Catalyst's size estimate for the
-    plan is used (a stats lookup, not a Spark action).
+
+def rows_fit_one_task(df: DataFrame, path: str, width_col: str) -> bool:
+    """True (the single-row plan) when the largest ``width_col`` is at
+    most ``WIDE_ROW_CHARS``, read from the footers, or without the
+    statistic from one pruned ``max`` over ``df``; False (the segmented
+    plan) otherwise."""
+    mx = parquet_col_max(path, width_col)
+    if mx is None:
+        mx = df.agg(F.max(width_col)).first()[0]
+    return mx is not None and mx <= WIDE_ROW_CHARS
+
+
+def fanout_partitions(spark: SparkSession, path: str) -> "int | None":
+    """Partitions for a self-join whose fan-out grows with the square of
+    the rows: the cluster width from ``FANOUT_REPARTITION_ROWS`` rows on
+    or at an unknown count; None (no repartition) below it."""
+    n = parquet_num_rows(path)
+    if n is None or n >= FANOUT_REPARTITION_ROWS:
+        return spark.sparkContext.defaultParallelism
+    return None
+
+
+def kernel_partitions(spark: SparkSession, path: str) -> "int | None":
+    """Partitions for a per-row Python kernel over a table below the scan
+    floor's ``DEFAULT_MIN_BYTES``: one per ``KERNEL_ROWS_PER_TASK`` rows,
+    capped at the cluster width, from ``KERNEL_REPARTITION_ROWS`` rows
+    on; the full width at an unknown count. None (no repartition) for
+    fewer rows, or at or above the floor, where the scan is spread."""
+    if input_bytes_of_path(path) >= DEFAULT_MIN_BYTES:
+        return None
+    width = spark.sparkContext.defaultParallelism
+    n = parquet_num_rows(path)
+    if n is None:
+        return width
+    if n < KERNEL_REPARTITION_ROWS:
+        return None
+    return min(width, n // KERNEL_ROWS_PER_TASK)
+
+
+def _scan_partitions(spark: SparkSession, sizes: "list[int]") -> int:
+    """Tasks Spark's file scan cuts files of ``sizes`` into: splits of
+    ``min(maxPartitionBytes, max(openCostInBytes, (bytes + files x
+    openCost) / minPartitionNum))``, packed next-fit-decreasing with each
+    split charged its open cost (``FilePartition`` in Spark SQL)."""
+    jspark = spark._jsparkSession
+    conf = jspark.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    min_parts = (
+        min_parts.get()
+        if min_parts.isDefined()
+        else jspark.leafNodeDefaultParallelism()
+    )
+    split = min(
+        conf.filesMaxPartitionBytes(),
+        max(open_cost, sum(s + open_cost for s in sizes) // min_parts),
+    )
+    splits = sorted(
+        (min(split, s - off) for s in sizes for off in range(0, s, split)),
+        reverse=True,
+    )
+    parts, packed = int(bool(splits)), 0
+    for s in splits:
+        if packed + s > split:
+            parts, packed = parts + 1, 0
+        packed += s + open_cost
+    return parts
+
+
+def cpu_parallel_floor(df: DataFrame, path: str) -> DataFrame:
+    """Repartition ``df`` round-robin to the cluster width when the
+    table at ``path`` would scan a CPU-dense derivation on too few
+    cores; ``df`` unchanged otherwise.
+
+    A scan spreads its rows over at most as many tasks as Spark cuts
+    splits, and a parquet file splits only at row-group boundaries, so
+    every narrow expression chained onto it runs on at most
+    min(scan tasks, non-empty row groups) cores until the first shuffle.
+    The floor skips below ``DEFAULT_MIN_BYTES`` (the work fits one task)
+    and at ``width x spark.sql.files.maxPartitionBytes`` or more (a
+    splittable layout already yields ``width`` tasks), both from a
+    listing. Inside that window it fires when the listing gives fewer
+    than ``width`` scan tasks; otherwise it reads the footers and fires
+    when they hold fewer than ``width`` non-empty row groups (an unknown
+    count skips: the scan is already ``width`` tasks wide). Catalyst
+    pushes pruning and filters through the repartition
+    (tests/test_layout_floor.py).
     """
     spark = df.sparkSession
-    if target is None:
-        target = spark.sparkContext.defaultParallelism
-    if input_bytes is None:
-        input_bytes = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    if input_bytes < min_bytes:
+    width = spark.sparkContext.defaultParallelism
+    sizes = _parquet_file_sizes(path)
+    nbytes = sum(sizes)
+    max_split = (
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
+    if nbytes < DEFAULT_MIN_BYTES or nbytes >= width * max_split:
         return df
-    if input_bytes >= target * _max_partition_bytes(spark):
-        return df
-    # Inside the window, the guards above are bytes-based only: a
-    # multi-file (or multi-row-group) input may ALREADY scan with >=
-    # target tasks, and an unconditional repartition would add a
-    # redundant shuffle (round-11 ADVICE). Asking the physical plan for
-    # its partition count costs one extra planning pass, paid only here
-    # — where the alternative was a shuffle. CALLER CONTRACT (r12
-    # ADVICE): apply this operator directly above a file scan (the
-    # registry does exactly that). The .rdd probe converts the plan to
-    # an RDD; under AQE, a plan containing SHUFFLES can materialize
-    # query stages here (run real jobs) — scan-only plans cannot, which
-    # is what keeps this probe a planning pass and not an execution.
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
+    if _scan_partitions(spark, sizes) >= width:
+        groups = parquet_nonempty_row_groups(path)
+        if groups is None or groups >= width:
+            return df
+    return df.repartition(width)

@@ -32,6 +32,7 @@ from amsterdam_map_data_wrangling_spark.functions.text import (
     ROLLING_MOD,
     tokens,
 )
+from amsterdam_map_data_wrangling_spark.operators.layout import WIDE_ROW_CHARS
 
 
 def token_segments(
@@ -74,7 +75,7 @@ def segmented_rolling_fingerprint(
     id_col: str,
     text_col: str,
     seg_tokens: int = 16_384,
-    wide_chars: int = 65_536,
+    wide_chars: int = WIDE_ROW_CHARS,
 ) -> DataFrame:
     """``(id, rfp)`` — the per-document polynomial rolling fingerprint
     (fold ``acc*31 + h(token) mod M`` over md5-prefix token hashes,

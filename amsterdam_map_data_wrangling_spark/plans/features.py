@@ -161,23 +161,19 @@ def robust_z_by_priority(spark, sf_dir):
     "float MEAN gated rounded to 6, per the tfidf family convention.",
 )
 def unigram_lm_scores(spark, sf_dir):
-    from amsterdam_map_data_wrangling_spark.plans.text import (
-        _parquet_col_max,
+    from amsterdam_map_data_wrangling_spark.operators.layout import (
+        WIDE_ROW_CHARS,
+        rows_fit_one_task,
     )
 
     (documents,) = _t(spark, sf_dir, "documents")
-    # wide-row adaptive path (r15 soak: the axis's worst wall at 8.4x —
-    # the split+md5 of a 48 MB doc is atomic in its reading task and
-    # runs twice). Footer-metadata probe as in doc_rolling_fingerprint;
-    # narrow corpora (every gate/bench SF) keep the registered plan
-    # byte-identical, wide corpora token-segment the huge docs so the
-    # hashing parallelizes (token multiset identical; the 6-decimal
-    # rounding absorbs the partial-sum re-association, same error class
-    # as any hash-agg order change).
-    mx = _parquet_col_max(f"{sf_dir}/documents.parquet", "n_chars")
-    if mx is None:
-        mx = documents.agg(F.max("n_chars")).first()[0]
-    wide = None if (mx is not None and mx <= 65_536) else 65_536
+    # wide corpora token-segment the documents past the width limit
+    # (token multiset identical; the 6-decimal rounding absorbs the
+    # partial-sum re-association — tests/test_widerow.py)
+    narrow = rows_fit_one_task(
+        documents, f"{sf_dir}/documents.parquet", "n_chars"
+    )
+    wide = None if narrow else WIDE_ROW_CHARS
     return unigram_logprob_scores(
         documents, "doc_id", "text", wide_chars=wide
     ).select(

@@ -360,10 +360,8 @@ def geo_way_lengths(spark, sf_dir):
     "candidates are density-bounded per cell, never all-pairs.",
 )
 def geo_nn_on_sphere(spark, sf_dir):
-    import os
-
-    from amsterdam_map_data_wrangling_spark.sources.fs import (
-        parquet_num_rows,
+    from amsterdam_map_data_wrangling_spark.operators.layout import (
+        fanout_partitions,
     )
 
     pts = _points(spark, sf_dir, cell_units=1600)
@@ -375,23 +373,11 @@ def geo_nn_on_sphere(spark, sf_dir):
     # file; 34 s at the sf1 scale point). Hash-partitioning the probe
     # side on the cell id is the same plan a cell-partitioned production
     # layout gives for free, and parallelizes the emission at any input
-    # layout. (The 4 MiB cpu_parallel_floor window is the wrong guard
-    # here: customer's bytes are tiny — the blow-up is the join fan-out,
-    # which this plan knows about and the loader cannot.)
-    #
-    # ROW-COUNT window (r18 optimization round): the fan-out is
-    # quadratic in ROWS (~9·n²/n_cells in-cell pairs), so the guard is
-    # the footer row count, not bytes. Below ~50k points the whole
-    # emission is < ~6M candidate pairs — under a second of one-core
-    # trig — and the exchange's fixed cost exceeds its benefit
-    # (measured 0.6 s at sf0.1's 15k points); the r11 wall fired at
-    # 150k (52M pairs), well above. An unreadable footer fails SAFE
-    # into the repartition (the production path).
-    n_pts = parquet_num_rows(os.path.join(sf_dir, "customer.parquet"))
-    if n_pts is None or n_pts >= 50_000:
-        pts = pts.repartition(
-            spark.sparkContext.defaultParallelism, "cy", "cx"
-        )
+    # layout. Gated on rows, as the fan-out is quadratic in them; both
+    # regimes pinned in tests/test_geo_ways.py.
+    n_parts = fanout_partitions(spark, f"{sf_dir}/customer.parquet")
+    if n_parts is not None:
+        pts = pts.repartition(n_parts, "cy", "cx")
     off = F.array(F.lit(-1), F.lit(0), F.lit(1))
     # explode the CANDIDATE side into its 9 neighbor cells: the join on
     # (cy, cx) is then pure equi and each true pair matches exactly once

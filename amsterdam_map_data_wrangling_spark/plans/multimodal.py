@@ -577,47 +577,20 @@ def warc_roundtrip_stats(spark, sf_dir):
     "leave the scanning executor.",
 )
 def jpeg_pixel_stats(spark, sf_dir):
-    import os
-
     from amsterdam_map_data_wrangling_spark.operators.jpeg import (
         extract_jpeg_pixels,
         synthesize_jpeg_payloads,
     )
     from amsterdam_map_data_wrangling_spark.operators.layout import (
-        DEFAULT_MIN_BYTES,
-        input_bytes_of_path,
-    )
-    from amsterdam_map_data_wrangling_spark.sources.fs import (
-        parquet_num_rows,
+        kernel_partitions,
     )
 
     (documents,) = _t(spark, sf_dir, "documents")
-    # ROW-COUNT parallelism window (r19; the geo_nn r18 pattern): the
-    # encode+decode kernel costs ~130 us/row of pure Python — ~100x a
-    # tokenize — so the loader's BYTE floor (cpu_parallel_floor,
-    # >= 4 MiB) is the wrong axis here: a 0.6 MB single-row-group
-    # documents file scans as ONE task and serializes the whole JPEG
-    # pipeline onto one core. Fire on the footer row count (>= 2000
-    # rows ~ the exchange's fixed cost at ~130 us/row), but ONLY when
-    # the byte floor did NOT already repartition (bytes <
-    # DEFAULT_MIN_BYTES) — at 10x and beyond the loader's floor (or
-    # native splits) already spread the scan, and a second exchange
-    # would be pure waste. Task COUNT is sized by rows, not cores: each
-    # MapInPandas task pays ~20 ms of Python-runner setup (measured via
-    # an identity-kernel probe), so ~500 rows/task (~65 ms kernel)
-    # keeps overhead <1/3 while the defaultParallelism cap takes over
-    # at any real scale. Measured sweep at sf0.1's 5k rows: 1 task
-    # 1.09 s, 32 tasks 0.74 s, 8-16 tasks 0.46 s. Hash-partition on
-    # the unique id (no round-robin pre-sort, deterministic under
-    # retries — guide §2.5). An unreadable footer fails safe into the
-    # repartition at full parallelism.
-    path = os.path.join(sf_dir, "documents.parquet")
-    n_rows = parquet_num_rows(path)
-    if (n_rows is None or n_rows >= 2_000) and input_bytes_of_path(
-        path
-    ) < DEFAULT_MIN_BYTES:
-        par = spark.sparkContext.defaultParallelism
-        if n_rows is not None:
-            par = max(1, min(par, n_rows // 500))
-        documents = documents.repartition(par, "doc_id")
+    # the ~130 us/row Python kernel needs an exchange sized by rows even
+    # below the loader's byte floor (sf0.1's 5k rows: 1 task 1.09 s, 8-16
+    # tasks 0.46 s); hashing the unique id keeps retries deterministic.
+    # All three regimes pinned in tests/test_jpeg.py.
+    n_parts = kernel_partitions(spark, f"{sf_dir}/documents.parquet")
+    if n_parts is not None:
+        documents = documents.repartition(n_parts, "doc_id")
     return extract_jpeg_pixels(synthesize_jpeg_payloads(documents, "doc_id"))

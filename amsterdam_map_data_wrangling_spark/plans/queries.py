@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from amsterdam_map_data_wrangling_spark.operators.layout import key_is_dense
 from amsterdam_map_data_wrangling_spark.plans.catalog import (
     QUERIES,
     QuerySpec,
@@ -688,21 +689,12 @@ def running_revenue_per_customer(spark, sf_dir):
 )
 def event_gap_stats(spark, sf_dir):
     (events,) = _t(spark, sf_dir, "events")
-    # data-adaptive lag plan (r15 high-null soak: 5.3x at factor 100 /
-    # 50% NULL user_id on the one-partition lag; the chunked form wins
-    # 4.1x there). Footer null-fraction probe as in gap_sessionization;
-    # dense-key corpora (every gate/bench SF) keep the registered plan.
-    # The chunked twin computes the gap from exact integer micros
-    # (lag VALUES identical; the seconds division differs from the
+    # the chunked twin computes the gap from exact integer micros (lag
+    # VALUES identical; the seconds division differs from the
     # double-cast subtraction by <1 ulp, absorbed by the 2-decimal
     # rounding on avg/max — oracle-gated on a half-null corpus in
-    # tests/test_widerow.py).
-    from amsterdam_map_data_wrangling_spark.plans.text import (
-        _parquet_col_null_frac,
-    )
-
-    nf = _parquet_col_null_frac(f"{sf_dir}/events.parquet", "user_id")
-    if nf is not None and nf < 0.10:
+    # tests/test_skew.py)
+    if key_is_dense(f"{sf_dir}/events.parquet", "user_id"):
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         gap = F.col("ts").cast("double") - F.lag(
             F.col("ts").cast("double")
@@ -831,21 +823,12 @@ def weekly_cohort_retention(spark, sf_dir):
 )
 def funnel_conversion(spark, sf_dir):
     (events,) = _t(spark, sf_dir, "events")
-    # data-adaptive window plan (r15 high-null soak: 6.3x at factor
-    # 100 / 50% NULL user_id — the chained running-max flags put the
-    # NULL slice in one task). Footer null-fraction probe as in
-    # gap_sessionization; dense-key corpora (every gate/bench SF) keep
-    # the registered plan byte-identical. The chunked state-machine
-    # twin (operators/skew.py:chunked_staged_funnel) is value-identical
-    # by monotone-state composition — exact integers end to end,
+    # the chunked state-machine twin
+    # (operators/skew.py:chunked_staged_funnel) is value-identical by
+    # monotone-state composition — exact integers end to end,
     # equivalence pinned in tests/test_skew.py and oracle-gated on a
-    # half-null corpus.
-    from amsterdam_map_data_wrangling_spark.plans.text import (
-        _parquet_col_null_frac,
-    )
-
-    nf = _parquet_col_null_frac(f"{sf_dir}/events.parquet", "user_id")
-    if nf is not None and nf < 0.10:
+    # half-null corpus
+    if key_is_dense(f"{sf_dir}/events.parquet", "user_id"):
         w = (
             Window.partitionBy("user_id")
             .orderBy("ts", "event_id")
@@ -1441,23 +1424,10 @@ def cube_revenue(spark, sf_dir):
 )
 def gap_sessionization(spark, sf_dir):
     (events,) = _t(spark, sf_dir, "events")
-    # data-adaptive window plan (r15 high-null soak): a NULL-heavy key
-    # puts the whole NULL slice in ONE window partition — measured 4.5x
-    # at factor 100 / 50% null, where the chunked two-level form wins
-    # 2.9x. The NULL fraction reads from the parquet footers (no job);
-    # sess_idx is exact integers in BOTH plans, so the choice is pure
-    # performance (equivalence pinned incl. null keys and chunk seams
-    # in tests/test_skew.py; the oracle gate replays the naive idiom on
-    # a half-null corpus in tests/test_widerow.py). Dense-key corpora
-    # (every gate/bench SF: 0 nulls) keep the registered one-shuffle
-    # plan, which wins at uniform and <=10%-hot (the r14 crossover);
-    # unknown stats fall to the bounded chunked plan.
-    from amsterdam_map_data_wrangling_spark.plans.text import (
-        _parquet_col_null_frac,
-    )
-
-    nf = _parquet_col_null_frac(f"{sf_dir}/events.parquet", "user_id")
-    if nf is not None and nf < 0.10:
+    # sess_idx is exact integers in both plans (equivalence pinned incl.
+    # null keys and chunk seams in tests/test_skew.py, which also
+    # replays the oracle on a half-null corpus)
+    if key_is_dense(f"{sf_dir}/events.parquet", "user_id"):
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         us = F.unix_micros(F.col("ts"))
         gap = us - F.lag(us).over(w)

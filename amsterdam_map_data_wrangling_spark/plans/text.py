@@ -21,18 +21,10 @@ from amsterdam_map_data_wrangling_spark.functions.text import (
     predict_lang,
     tokens,
 )
-from amsterdam_map_data_wrangling_spark.plans.catalog import _t, query
-
-
-# Footer probes for data-adaptive plan choice — ported to pyarrow.fs at
-# r16 (r15 verdict "What's missing" #2) so they work on object-store
-# URIs, and re-exported here because every adaptive plan and test
-# imports them from this module. Fail-safe contract unchanged: None →
-# callers take their bounded plan.
-from amsterdam_map_data_wrangling_spark.sources.fs import (  # noqa: E402
-    parquet_col_max as _parquet_col_max,
-    parquet_col_null_frac as _parquet_col_null_frac,
+from amsterdam_map_data_wrangling_spark.operators.layout import (
+    rows_fit_one_task,
 )
+from amsterdam_map_data_wrangling_spark.plans.catalog import _t, query
 
 
 @query(
@@ -228,21 +220,10 @@ def doc_rolling_fingerprint(spark, sf_dir):
     )
 
     (documents,) = _t(spark, sf_dir, "documents")
-    # data-adaptive path choice (the _hot_codes precedent): the
-    # segmented plan's union arm re-scans the table, which costs ~2x on
-    # an all-narrow corpus — the MAX of the n_chars metadata column
-    # picks the plan, read from the parquet FOOTER statistics
-    # driver-side (no Spark job; the file-size-audit precedent), with a
-    # one-action pruned-scan agg as the fallback when stats are absent.
-    # Both paths are value-identical (tests/test_widerow.py), so a
-    # stale/wrong n_chars can only cost speed, never correctness; an
-    # unknown maximum falls to the safe (segmented) path. Gate/bench
-    # SFs have max n_chars ~600 and keep the byte-identical registered
-    # single-row plan.
-    mx = _parquet_col_max(f"{sf_dir}/documents.parquet", "n_chars")
-    if mx is None:
-        mx = documents.agg(F.max("n_chars")).first()[0]
-    if mx is not None and mx <= 65_536:
+    # the single-row and segmented plans are value-identical
+    # (tests/test_widerow.py)
+    path = f"{sf_dir}/documents.parquet"
+    if rows_fit_one_task(documents, path, "n_chars"):
         staged = documents.select(
             "doc_id", token_md5_hashes(F.col("text")).alias("th")
         )
@@ -874,14 +855,11 @@ def pii_redaction_stats(spark, sf_dir):
             .orderBy("source")
         )
 
-    # wide-row adaptive path (r15 soak: 9 regex passes over a 48 MB doc
-    # run in ONE task — 7.3x on the same-bytes twin). Footer-metadata
-    # probe as in doc_rolling_fingerprint; both paths value-identical
-    # so wrong metadata costs speed, never correctness.
-    mx = _parquet_col_max(f"{sf_dir}/documents.parquet", "n_chars")
-    if mx is None:
-        mx = documents.agg(F.max("n_chars")).first()[0]
-    if mx is not None and mx <= 65_000:
+    # the nine regex passes per document run single-row below the
+    # width limit and segmented above it; both paths are value-identical
+    # against the oracle (tests/test_widerow.py)
+    path = f"{sf_dir}/documents.parquet"
+    if rows_fit_one_task(documents, path, "n_chars"):
         red = aug.select(
             "source",
             F.size(

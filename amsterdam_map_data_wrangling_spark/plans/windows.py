@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from amsterdam_map_data_wrangling_spark.operators.layout import key_is_dense
 from amsterdam_map_data_wrangling_spark.plans.catalog import _t, query
 
 
@@ -111,25 +112,17 @@ def sliding_window_by_type(spark, sf_dir):
 )
 def session_window_per_user(spark, sf_dir):
     (events,) = _t(spark, sf_dir, "events")
-    # data-adaptive plan (r15 high-null soak: 2.5x at factor 100 / 50%
-    # NULL user_id — the built-in session_window partitions by key
-    # internally, one task per key). Footer null-fraction probe as in
-    # gap_sessionization. The chunked twin replays session_window's
-    # MERGE RULE exactly: point-event windows [ts, ts+gap) merge iff
-    # the next event starts STRICTLY before the running end, i.e. same
-    # session iff consecutive diff < gap — in exact integer micros,
+    # the chunked twin replays session_window's MERGE RULE exactly:
+    # point-event windows [ts, ts+gap) merge iff the next event starts
+    # STRICTLY before the running end, i.e. same session iff
+    # consecutive diff < gap — in exact integer micros,
     # diff <= gap-1, which is chunked_gap_sessionize with
     # gap_us = 3_600_000_000 - 1 (ties at diff 0 are same-session in
     # both). session_start = min event ts per session (w.start is the
     # earliest event, not gap-extended); counts are exact integers.
     # Value identity oracle-gated on a half-null corpus
     # (tests/test_skew.py) and at both gate SFs.
-    from amsterdam_map_data_wrangling_spark.plans.text import (
-        _parquet_col_null_frac,
-    )
-
-    nf = _parquet_col_null_frac(f"{sf_dir}/events.parquet", "user_id")
-    if nf is not None and nf < 0.10:
+    if key_is_dense(f"{sf_dir}/events.parquet", "user_id"):
         return (
             events.groupBy(
                 F.session_window("ts", "1 hour").alias("w"), "user_id"

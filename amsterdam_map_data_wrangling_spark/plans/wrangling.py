@@ -272,7 +272,7 @@ def table_stats(spark, sf_dir):
 def json_props_stats(spark, sf_dir):
     (events,) = _t(spark, sf_dir, "events")
     # per-row JSON parse — CPU-dense opt-in (events is not loader-floored)
-    events = cpu_parallel_floor(events)
+    events = cpu_parallel_floor(events, f"{sf_dir}/events.parquet")
     k = F.from_json(F.col("props"), "k INT").getField("k")
     return (
         events.select("event_type", k.alias("k"))
@@ -608,7 +608,7 @@ def nested_json_shred(spark, sf_dir):
     # JSON synthesis + parse is CPU-dense per input byte — opt in to the
     # scan-parallelism floor (orders is not floored by the loader; its
     # other consumers are IO-thin star aggregates).
-    orders = cpu_parallel_floor(orders)
+    orders = cpu_parallel_floor(orders, f"{sf_dir}/orders.parquet")
     js = F.concat(
         F.lit('{"id": '),
         F.col("o_orderkey").cast("string"),
@@ -795,7 +795,7 @@ def snapshot_table_diff(spark, sf_dir):
 def map_ops_surface(spark, sf_dir):
     (orders,) = _t(spark, sf_dir, "orders")
     # per-row map build + explode fan-out — CPU-dense opt-in
-    orders = cpu_parallel_floor(orders)
+    orders = cpu_parallel_floor(orders, f"{sf_dir}/orders.parquet")
     m = F.map_concat(
         F.create_map(
             F.lit("status"),
@@ -862,7 +862,7 @@ def map_ops_surface(spark, sf_dir):
 def variant_json_stats(spark, sf_dir):
     (orders,) = _t(spark, sf_dir, "orders")
     # same CPU-dense opt-in as nested_json_shred: parse_json per row
-    orders = cpu_parallel_floor(orders)
+    orders = cpu_parallel_floor(orders, f"{sf_dir}/orders.parquet")
     js = F.concat(
         F.lit('{"id": '),
         F.col("o_orderkey").cast("string"),

@@ -1,11 +1,13 @@
-"""Explicit StructType schemas.
+"""Schemas of the OSM parse and the shaped tables.
 
 The reference declares its schemas as field-order lists
 (``amsterdam_map_data_wrangling.py:92-96``) and relies on positional
-CSV↔SQLite binding (comment at ``:91``). Here every table gets a named,
-typed StructType (SURVEY.md §1.3): ids are longs, lat/lon doubles,
-timestamps real timestamps — SQLite's everything-is-a-string dynamic
-typing is deliberately not reproduced.
+CSV↔SQLite binding (comment at ``:91``). Here the XML parse reads into
+typed StructTypes (SURVEY.md §1.3): ids are longs, lat/lon doubles —
+SQLite's everything-is-a-string dynamic typing is deliberately not
+reproduced. The five shaped tables keep the reference's column order
+through the ``*_FIELDS`` lists, with their types set by the shaping
+expressions in ``pipeline.py``.
 """
 
 from __future__ import annotations
@@ -54,56 +56,8 @@ OSM_WAY_RAW = T.StructType(
     ]
 )
 
-# ---------------------------------------------------------------------------
-# OSM shaped (relational) schemas — the five output tables, typed.
-# Column sets per amsterdam_map_data_wrangling.py:92-96.
-# ---------------------------------------------------------------------------
-
-NODES = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("user", T.StringType()),
-        T.StructField("uid", T.LongType()),
-        T.StructField("version", T.IntegerType()),
-        T.StructField("changeset", T.LongType()),
-        T.StructField("timestamp", T.TimestampType()),
-    ]
-)
-
-NODES_TAGS = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("key", T.StringType()),
-        T.StructField("value", T.StringType()),
-        T.StructField("type", T.StringType()),
-    ]
-)
-
-WAYS = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("user", T.StringType()),
-        T.StructField("uid", T.LongType()),
-        T.StructField("version", T.IntegerType()),
-        T.StructField("changeset", T.LongType()),
-        T.StructField("timestamp", T.TimestampType()),
-    ]
-)
-
-WAYS_TAGS = NODES_TAGS
-
-WAYS_NODES = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("node_id", T.LongType(), False),
-        T.StructField("position", T.IntegerType(), False),
-    ]
-)
-
-#: Field order of the reference CSV outputs (amsterdam_map_data_wrangling.py:92-96),
-#: kept for byte-compat export mode.
+#: Column order of the five shaped tables, as in the reference CSV outputs
+#: (amsterdam_map_data_wrangling.py:92-96).
 NODE_FIELDS = ["id", "lat", "lon", "user", "uid", "version", "changeset", "timestamp"]
 NODE_TAGS_FIELDS = ["id", "key", "value", "type"]
 WAY_FIELDS = ["id", "user", "uid", "version", "changeset", "timestamp"]

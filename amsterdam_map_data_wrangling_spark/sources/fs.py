@@ -87,38 +87,19 @@ def list_files(
 # ---------------------------------------------------------------------------
 # Parquet footer probes (pyarrow.fs — object-store capable)
 #
-# Driver-side, metadata-only reads used for DATA-ADAPTIVE plan choice
-# (r15: the chunked window levers pick their plan from the key's NULL
-# fraction; the wide-row levers from the max document width). r15
-# verdict "What's missing" #2: the original probes used os.listdir, so
-# on an object store they returned None and the plans silently paid the
-# bounded/chunked path even on dense keys. Ported here to pyarrow.fs so
-# the same probe works on any pyarrow-supported scheme (file://, s3://,
-# gs://, hdfs://) as well as bare local paths. Probes stay fail-safe:
-# ANY unexpected shape → None → callers take their bounded plan.
+# Driver-side, metadata-only reads behind the data-adaptive plan choices
+# of operators/layout.py, on any pyarrow-supported scheme (file://,
+# s3://, gs://, hdfs://) as well as bare local paths. Fail-safe: ANY
+# unexpected shape → None → the caller takes its safe plan.
 # ---------------------------------------------------------------------------
 
 
-#: footer-probe file-count budget: the probe must stay O(bounded), not
-#: O(n_files) — on a many-small-files table (the r16 axis measured 17k
-#: files for 17 MB) an exact probe would issue one ranged GET per file,
-#: costing more than the plan choice saves. Past the budget the probe
-#: answers None and every adaptive caller takes its ROBUST plan
-#: (chunked windows / segmented kernels), which is value-identical by
-#: the oracle gates and the right default on a layout that degenerate.
-#:
-#: 256, raised from the r16 value of 64 (r17): the r17 sf10 soak caught
-#: the 64-file budget misclassifying a HEALTHY big-table layout as
-#: degenerate — the 100x events table is 100 x ~target-size files (a
-#: normal partitioned write), the probe answered None, and
-#: session_window_per_user paid the chunked fail-safe on a dense-key
-#: corpus (measured 2.6x the naive plan it should have taken; same for
-#: the other three window levers). With the r17 fan-out the exact probe
-#: at 256 files costs a MEASURED 0.92 s at 50 ms/GET (13.0 s serial;
-#: ~40 ms local) — under the smallest measured plan delta — while a table
-#: past 256 files at healthy sizes is large enough that the chunked
-#: plans' overhead amortizes anyway. Never a sample: within budget the
-#: answer is exact over every footer; past it, None.
+#: footer-probe file-count budget: one ranged GET per file, so past it
+#: the probe answers None (never a sample) and the caller takes its safe
+#: plan. 256 files cost a measured 0.92 s at 50 ms/GET (~40 ms local),
+#: under the smallest plan delta; a 100-file events table (a normal
+#: partitioned write) must stay within it, and past 256 healthy files
+#: the safe plans' overhead amortizes.
 PROBE_MAX_FILES = 256
 
 
@@ -126,18 +107,13 @@ def pyarrow_fs_for(path: str):
     """(filesystem, fs_path) for a bare local path or any URI, mapping
     the Hadoop-only schemes pyarrow does not recognize to their pyarrow
     twin (``s3a://``/``s3n://`` → ``s3://``) and normalizing Hadoop's
-    single-slash local form (``file:/x``). The ONE place scheme
-    dispatch lives — the footer probes and the compaction audit both
-    resolve through here (r17 review: the audit had the mapping, the
-    probes did not, so every probe on an s3a:// table silently answered
-    None and the adaptive plans paid the chunked fail-safe — the exact
-    misclassification the budget fix closed for local layouts).
+    single-slash local form (``file:/x``). The one place scheme
+    dispatch lives: the footer probes, the layout listing and the
+    compaction audit all resolve through here.
 
-    A ``file://`` URI with a non-empty authority (``file://host/x`` —
-    a remote-host file reference) RAISES instead of silently probing
-    the wrong local path ``/host/x`` (r17 ADVICE): every caller wraps
-    probes in the fail-safe try/except, so the raise lands as None →
-    the bounded plan, never a wrong answer."""
+    A ``file://`` URI with a non-empty authority (``file://host/x``, a
+    remote-host file) raises instead of probing the local ``/host/x``;
+    callers catch it and take their safe plan."""
     from pyarrow import fs as pafs
 
     if path.startswith("file:"):
@@ -159,15 +135,11 @@ def pyarrow_fs_for(path: str):
 def hadoop_to_pyarrow_uri(uri: str) -> str:
     """Rewrite Hadoop-only schemes to the pyarrow scheme that serves the
     same store (``s3a://``/``s3n://`` → ``s3://``); other URIs pass
-    through untouched. Azure coverage (r17 ADVICE, verified against
-    pyarrow 16.1): ``abfs://`` / ``abfss://`` need NO rewrite —
-    ``FileSystem.from_uri`` dispatches both to AzureFileSystem natively
-    (pinned in tests/test_footer_probes.py). KNOWN UNMAPPED: the legacy
-    blob-endpoint schemes ``wasb://`` / ``wasbs://`` have no pyarrow
-    twin (the abfs rewrite would swap the blob endpoint for the dfs
-    endpoint — not guaranteed-equivalent on non-HNS accounts), so
-    probes on wasb tables answer None and adaptive callers take their
-    bounded plan: a documented limitation, not a silent one."""
+    through untouched. ``abfs://``/``abfss://`` need no rewrite
+    (``FileSystem.from_uri`` serves both; pinned in
+    tests/test_footer_probes.py). The legacy ``wasb://``/``wasbs://``
+    have no pyarrow twin (the abfs endpoint is not equivalent on non-HNS
+    accounts), so probes there answer None: the safe plan."""
     for hadoop_scheme in ("s3a://", "s3n://"):
         if uri.startswith(hadoop_scheme):
             return "s3://" + uri[len(hadoop_scheme):]
@@ -176,9 +148,7 @@ def hadoop_to_pyarrow_uri(uri: str) -> str:
 
 def read_parquet_footers(files: list, filesystem) -> list:
     """Footer metadata for each path in ``files`` (order-preserving),
-    fanned ``PROBE_FANOUT`` wide — object-store footer reads are
-    latency-bound, not bandwidth-bound (r17 axis: 64 files @ 50 ms RTT
-    = 3.35 s serial vs 0.31 s fanned). Shared by the probes and the
+    fanned ``PROBE_FANOUT`` wide. Shared by the probes and the
     compaction audit so retry/scheme policy cannot drift between them."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -192,24 +162,11 @@ def read_parquet_footers(files: list, filesystem) -> list:
         )
 
 
-#: footer-read fan-out: object-store footer probes are LATENCY-bound,
-#: not bandwidth-bound (one ranged GET of a few KB per file). The r17
-#: latency axis measured the probe at budget (64 files, 50 ms RTT):
-#: 3.35 s serial vs 0.31 s fanned 16-wide (10.7x), and on local FS the
-#: pool costs ~25 ms at 64 files — negligible against the plan delta
-#: the probe buys (scripts/archive/objectstore_latency_r17.json).
-#:
-#: 32, raised from 16 (r18): the r17 walls used OPEN-only accounting
-#: (post-open NativeFile reads uninstrumented — a documented lower
-#: bound). The r18 axis intercepts the reads too (each parquet footer =
-#: 1 open + 1 tail read = 2 billable GETs, measured), and true
-#: accounting nearly doubled the budget-probe wall: 256 files at
-#: 50 ms/GET cost 1.74 s fanned 16-wide — only ~13% headroom under the
-#: ~2 s smallest plan delta that justifies probing at all. 32-wide
-#: restores it to a measured 1.01 s (~2x headroom,
-#: scripts/catalog_latency.py). 32 concurrent metadata GETs remains
-#: far below any object store's per-prefix request ceiling (thousands
-#: of GET/s), and the local-FS pool cost stays in the tens of ms.
+#: footer-read fan-out: object-store footer reads are latency-bound (each
+#: footer is an open plus a tail read, two GETs of a few KB). 256 files
+#: at 50 ms/GET take a measured 1.01 s 32-wide against 1.74 s 16-wide,
+#: ~2x under the ~2 s smallest plan delta (scripts/catalog_latency.py);
+#: the local pool costs tens of ms.
 PROBE_FANOUT = 32
 
 
@@ -220,18 +177,13 @@ def _parquet_footers(
     — to a list of parquet footer metadata objects (one per file;
     non-recursive directory layout, matching Spark's parquet output
     shape). None when the path shape is unexpected, empty, or holds
-    more than ``max_files`` parquet files (see PROBE_MAX_FILES — the
-    fail-safe direction, never a guess from a sample: col_max from a
-    sample could MISS the one wide document, and null_frac from a
-    sample would be an estimate presented as a fact). Footer reads are
-    O(KB) per file regardless of data size: on an object store this is
-    one ranged GET per file, never a data scan — issued
-    ``PROBE_FANOUT`` at a time because the cost there is round trips,
-    not bytes. ``filesystem`` (any ``pyarrow.fs.FileSystem``) overrides
-    URI dispatch — the hook for credentialed stores and for the
-    latency-shaped wrapper the r17 axis measures with. Default dispatch
-    goes through :func:`pyarrow_fs_for`, so Hadoop-only schemes
-    (``s3a://``) resolve instead of silently answering None."""
+    more than ``max_files`` parquet files (see PROBE_MAX_FILES; never a
+    sample, which could miss the one wide document). Footer reads cost
+    O(KB) per file whatever the data size. ``filesystem`` (any
+    ``pyarrow.fs.FileSystem``) overrides :func:`pyarrow_fs_for`'s URI
+    dispatch — the hook for credentialed stores and for the
+    latency-shaped wrappers of scripts/objectstore_latency.py and
+    scripts/catalog_latency.py."""
     from pyarrow import fs as pafs
 
     if filesystem is not None:
@@ -257,15 +209,28 @@ def _parquet_footers(
 def parquet_num_rows(path: str, filesystem=None) -> "int | None":
     """Total row count from parquet footer metadata, driver-side (no
     Spark job) — None when the path shape is unexpected, so callers
-    fall back to their fail-safe plan. Same probe family as
-    :func:`parquet_col_max`; used by plans whose cost grows with ROWS
-    rather than bytes (e.g. geo_nn_on_sphere's quadratic-in-density
-    candidate fan-out, where a KB-sized table can still explode)."""
+    fall back to their fail-safe plan."""
     try:
         footers = _parquet_footers(path, filesystem=filesystem)
         if footers is None:
             return None
         return sum(md.num_rows for md in footers)
+    except Exception:
+        return None
+
+
+def parquet_nonempty_row_groups(path: str) -> "int | None":
+    """Number of row groups holding at least one row, over every file
+    under ``path``, from the footers — the most scan tasks a parquet
+    table can spread its rows over, however many splits Spark cuts.
+    None when the path shape is unexpected."""
+    try:
+        footers = _parquet_footers(path)
+        return None if footers is None else sum(
+            md.row_group(rg).num_rows > 0
+            for md in footers
+            for rg in range(md.num_row_groups)
+        )
     except Exception:
         return None
 
@@ -298,10 +263,7 @@ def parquet_col_null_frac(
 ) -> "float | None":
     """NULL fraction of a column from parquet footer statistics,
     driver-side (no Spark job) — None when the path shape is unexpected
-    or any row group lacks a null count. Same probe family as
-    :func:`parquet_col_max`; used where a NULL-heavy key makes the
-    one-window-partition-per-key plan the wrong one (r15 high-null
-    soak)."""
+    or any row group lacks a null count."""
     try:
         footers = _parquet_footers(path, filesystem=filesystem)
         if footers is None:

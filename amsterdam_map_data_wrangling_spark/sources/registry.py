@@ -43,6 +43,11 @@ def load_tables(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, tables: list[str] | None = None
 ) -> dict[str, DataFrame]:
     """Lazy DataFrames for each star-schema table under ``sf_dir``."""
+    # imported here: operators.layout reads through this package's fs.py
+    from amsterdam_map_data_wrangling_spark.operators.layout import (
+        cpu_parallel_floor,
+    )
+
     names = tables if tables is not None else STAR_TABLES
     # events.parquet carries TIMESTAMP(NANOS), which Spark's parquet reader
     # rejects outright. The conf below (runtime-settable SQL conf) makes it
@@ -81,7 +86,10 @@ def load_tables(
                     )
             else:
                 df = spark.read.parquet(path)
-            per_session[key] = _floor_cpu_dense(spark, _fix_nanos(df), path, name)
+            df = _fix_nanos(df)
+            if name in _CPU_DENSE_TABLES:
+                df = cpu_parallel_floor(df, path)
+            per_session[key] = df
         out[name] = per_session[key]
     return out
 
@@ -90,26 +98,12 @@ def load_tables(
 #: documents feeds only the text/gram/dedup/sparse families (tokenize →
 #: n-gram → md5 fan-out is 10-100x the byte read), embeddings only the
 #: ANN family (per-row vector math). For these the loader applies the
-#: scan-parallelism floor (operators/layout.py): a single-row-group
-#: parquet file otherwise serializes the whole derivation onto one core.
-#: The numeric star tables are NOT floored here — their consumers are
-#: mostly IO-thin aggregates where the extra shuffle measured net
-#: negative; CPU-dense exceptions (the JSON-synthesis queries over
-#: orders) opt in at the plan site instead.
+#: scan-parallelism floor (operators/layout.py). The numeric star
+#: tables are NOT floored here — their consumers are mostly IO-thin
+#: aggregates where the extra shuffle measured net negative; CPU-dense
+#: exceptions (the JSON-synthesis queries over orders) opt in at the
+#: plan site instead.
 _CPU_DENSE_TABLES = frozenset({"documents", "embeddings"})
-
-
-def _floor_cpu_dense(
-    spark: SparkSession, df: DataFrame, path: str, name: str
-) -> DataFrame:
-    if name not in _CPU_DENSE_TABLES:
-        return df
-    from amsterdam_map_data_wrangling_spark.operators.layout import (
-        cpu_parallel_floor,
-        input_bytes_of_path,
-    )
-
-    return cpu_parallel_floor(df, input_bytes=input_bytes_of_path(path))
 
 
 def _fix_nanos(df: DataFrame) -> DataFrame:

@@ -1,15 +1,10 @@
-"""Footer-probe unit tests (r16, r15 verdict "Next round" #3).
+"""Footer-probe unit tests (``sources/fs.py``).
 
-The data-adaptive plans (chunked window levers, wide-row levers) pick
-their physical strategy from parquet footer statistics read driver-side.
-r15 shipped the probes on os.listdir — local-FS only, so an object-store
-run silently fell back to the bounded plan even on dense keys. The r16
-port goes through ``pyarrow.fs.FileSystem.from_uri``; these tests pin
-that the probe answers are IDENTICAL through a bare local path and a
-``file://`` URI resolved by pyarrow.fs (the same code path an ``s3://``
-or ``gs://`` URI takes — scheme dispatch is pyarrow's), and that every
-unexpected shape stays fail-safe None (callers take the bounded plan —
-the safe direction, plans/queries.py gap_sessionization et al.).
+``operators/layout.py`` picks each data-adaptive plan from these
+probes. They must answer identically through a bare local path and a
+URI resolved by ``pyarrow.fs`` (the branch an ``s3://`` or ``gs://``
+URI takes), and every unexpected shape must answer None, so that the
+caller takes its safe plan.
 """
 
 from __future__ import annotations
@@ -21,6 +16,7 @@ import pytest
 from amsterdam_map_data_wrangling_spark.sources.fs import (
     parquet_col_max,
     parquet_col_null_frac,
+    parquet_nonempty_row_groups,
 )
 
 
@@ -65,6 +61,20 @@ def test_probes_on_single_file(parquet_dir):
     assert parquet_col_max(uri, "k") == 44
 
 
+def test_nonempty_row_groups_skips_empty_groups(tmp_path):
+    """Row groups are counted over every file, and an empty file's
+    row group counts for nothing."""
+    d = tmp_path / "rg"
+    d.mkdir()
+    k = pa.array(range(10), type=pa.int64())
+    pq.write_table(pa.table({"k": k}), d / "part-0.parquet", row_group_size=3)
+    pq.write_table(pa.table({"k": k.slice(0, 0)}), d / "part-1.parquet")
+    assert pq.read_metadata(d / "part-1.parquet").num_row_groups == 1
+    assert parquet_nonempty_row_groups(str(d)) == 4
+    assert parquet_nonempty_row_groups(str(d / "part-0.parquet")) == 4
+    assert parquet_nonempty_row_groups(str(tmp_path / "ghost")) is None
+
+
 def test_probes_fail_safe_none(parquet_dir, tmp_path):
     # missing column → None (never a guess)
     assert parquet_col_max(str(parquet_dir), "nope") is None
@@ -80,25 +90,10 @@ def test_probes_fail_safe_none(parquet_dir, tmp_path):
     assert parquet_col_max("notascheme://bucket/x.parquet", "k") is None
 
 
-def test_plans_reexport_is_the_ported_probe():
-    """plans/text.py re-exports the probes under their historical names;
-    every adaptive plan imports from there — pin that the re-export IS
-    the pyarrow.fs implementation (no stale copy can drift)."""
-    from amsterdam_map_data_wrangling_spark.plans.text import (
-        _parquet_col_max,
-        _parquet_col_null_frac,
-    )
-
-    assert _parquet_col_max is parquet_col_max
-    assert _parquet_col_null_frac is parquet_col_null_frac
-
-
 def test_probe_file_count_budget_fails_safe(tmp_path):
     """O(bounded), not O(n_files): past PROBE_MAX_FILES the probe
-    answers None (adaptive callers take their robust plan) instead of
-    issuing one footer read per file — the r16 many-small-files axis
-    measured 17k files for 17 MB, where an exact probe would cost more
-    than the plan choice saves."""
+    answers None (callers take their safe plan) instead of issuing one
+    footer read per file."""
     from amsterdam_map_data_wrangling_spark.sources import fs as fsmod
 
     d = tmp_path / "many"
@@ -114,78 +109,36 @@ def test_probe_file_count_budget_fails_safe(tmp_path):
     assert parquet_col_null_frac(str(d), "k") == 0.0
 
 
+def _latency_script():
+    """scripts/catalog_latency.py, whose ``ReadLatencyHandler`` counts
+    every metadata call and post-open read by kind."""
+    import importlib.util
+    import os as _os
+
+    spec = importlib.util.spec_from_file_location(
+        "catalog_latency",
+        _os.path.join(
+            _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
+            "scripts",
+            "catalog_latency.py",
+        ),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
 def test_probes_accept_explicit_filesystem_and_fan_out(parquet_dir):
-    """r17 object-store latency axis: the probes take an explicit
-    ``pyarrow.fs.FileSystem`` (the hook for credentialed stores and the
-    latency-shaped wrapper), answers are identical to local dispatch,
-    and footer reads fan out through a thread pool (PROBE_FANOUT) —
-    order-preserving, so col_max/null_frac see every footer exactly
-    once."""
+    """The probes take an explicit ``pyarrow.fs.FileSystem`` (the hook
+    for credentialed stores and the latency-shaped wrapper), answers are
+    identical to local dispatch, and footer reads fan out through a
+    thread pool (PROBE_FANOUT) — order-preserving, so col_max/null_frac
+    see every footer exactly once."""
     from pyarrow import fs as pafs
 
     from amsterdam_map_data_wrangling_spark.sources import fs as fs_mod
 
-    class Counting(pafs.FileSystemHandler):
-        def __init__(self):
-            self.calls = 0
-            self._fs = pafs.LocalFileSystem()
-
-        def get_type_name(self):
-            return "counting"
-
-        def __eq__(self, other):
-            return self is other
-
-        def __ne__(self, other):
-            return self is not other
-
-        def get_file_info(self, paths):
-            self.calls += 1
-            return self._fs.get_file_info(paths)
-
-        def get_file_info_selector(self, selector):
-            self.calls += 1
-            return self._fs.get_file_info(selector)
-
-        def open_input_file(self, path):
-            self.calls += 1
-            return self._fs.open_input_file(path)
-
-        def open_input_stream(self, path):
-            self.calls += 1
-            return self._fs.open_input_stream(path)
-
-        def normalize_path(self, path):
-            return self._fs.normalize_path(path)
-
-        def create_dir(self, path, recursive):
-            raise NotImplementedError
-
-        def delete_dir(self, path):
-            raise NotImplementedError
-
-        def delete_dir_contents(self, path, missing_dir_ok=False):
-            raise NotImplementedError
-
-        def delete_root_dir_contents(self):
-            raise NotImplementedError
-
-        def delete_file(self, path):
-            raise NotImplementedError
-
-        def move(self, src, dest):
-            raise NotImplementedError
-
-        def copy_file(self, src, dest):
-            raise NotImplementedError
-
-        def open_append_stream(self, path, metadata):
-            raise NotImplementedError
-
-        def open_output_stream(self, path, metadata):
-            raise NotImplementedError
-
-    handler = Counting()
+    handler = _latency_script().ReadLatencyHandler(0.0)
     wrapped = pafs.PyFileSystem(handler)
     assert (
         parquet_col_max(str(parquet_dir), "k", filesystem=wrapped) == 907
@@ -193,23 +146,18 @@ def test_probes_accept_explicit_filesystem_and_fan_out(parquet_dir):
     assert parquet_col_null_frac(
         str(parquet_dir), "k", filesystem=wrapped
     ) == pytest.approx(0.4)
-    # The property under test — NOT pyarrow's internal I/O call pattern
-    # (r17 ADVICE: the previous exact `calls == 8` pinned pyarrow's
-    # open/prefetch behavior; an upgrade could change it with zero repo
-    # regression): the probes issue a BOUNDED number of metadata round
-    # trips (a small constant per file per probe, never a data scan).
-    calls_default = handler.calls
+    # a bound, not pyarrow's internal I/O pattern, which an upgrade may
+    # change: a small constant of round trips per file, never a scan
+    calls_default = handler.total_calls
     assert 0 < calls_default <= 32
 
     # fan-out must not change answers OR the I/O issued, even at pool
-    # size 1 (the serial degenerate) or wider than the file count —
-    # the serial==fanned call-count identity is the relative property
-    # the old exact count was standing in for
+    # size 1 (serial) or wider than the file count
     old = fs_mod.PROBE_FANOUT
     try:
         for fanout in (1, 64):
             fs_mod.PROBE_FANOUT = fanout
-            handler.calls = 0
+            handler.calls = {}
             assert (
                 parquet_col_max(str(parquet_dir), "k", filesystem=wrapped)
                 == 907
@@ -217,20 +165,16 @@ def test_probes_accept_explicit_filesystem_and_fan_out(parquet_dir):
             assert parquet_col_null_frac(
                 str(parquet_dir), "k", filesystem=wrapped
             ) == pytest.approx(0.4)
-            assert handler.calls == calls_default
+            assert handler.total_calls == calls_default
     finally:
         fs_mod.PROBE_FANOUT = old
 
 
 def test_healthy_many_file_layout_probes_exactly(tmp_path):
-    """The r17 sf10-soak finding, pinned: a ~100-file table is a
-    HEALTHY partitioned layout at scale (the 100x events table), not a
-    degenerate one — the probe must answer exactly there, because a
-    None sends every adaptive window lever to its chunked fail-safe on
-    a corpus whose dense keys want the naive plan (measured 2.6x on
-    session_window_per_user before PROBE_MAX_FILES rose to 256). If a
-    future change drops the budget below ~real-table file counts, this
-    goes red without needing a 100x soak to notice."""
+    """A ~100-file table (the 100x events table) is a healthy
+    partitioned layout: the probe must answer exactly there, or every
+    key-density plan takes its chunked twin on dense keys (2.6x slower
+    on session_window_per_user)."""
     from amsterdam_map_data_wrangling_spark.sources import fs as fsmod
 
     assert fsmod.PROBE_MAX_FILES >= 128, (
@@ -247,12 +191,9 @@ def test_healthy_many_file_layout_probes_exactly(tmp_path):
 
 
 def test_scheme_dispatch_is_shared_and_maps_hadoop_schemes(tmp_path):
-    """r17 review finding: the compaction audit mapped s3a://→s3:// but
-    the probes did not, so every probe on an s3a:// table silently
-    answered None (the chunked-fail-safe toll, permanently, on object
-    stores). Scheme dispatch now lives in ONE place — pin the mapping,
-    the Hadoop single-slash file:/ form, and that probes resolve
-    through it."""
+    """Scheme dispatch lives in one place: pin the Hadoop-scheme
+    mapping, the Hadoop single-slash file:/ form, and that probes
+    resolve through it."""
     from amsterdam_map_data_wrangling_spark.sources.fs import (
         hadoop_to_pyarrow_uri,
         pyarrow_fs_for,
@@ -280,11 +221,9 @@ def test_scheme_dispatch_is_shared_and_maps_hadoop_schemes(tmp_path):
 
 
 def test_file_uri_with_remote_authority_fails_safe(tmp_path):
-    """r17 ADVICE: ``file://host/share/x`` (non-empty authority — a
-    remote-host file reference) used to collapse into the LOCAL path
-    ``/host/share/x`` and silently probe the wrong file. It must raise
-    (pyarrow_fs_for) and therefore answer None through the probes'
-    fail-safe — the bounded plan, never a wrong answer."""
+    """``file://host/share/x`` (a remote-host file) must not probe the
+    local ``/host/share/x``: pyarrow_fs_for raises, so the probes answer
+    None (the safe plan, never a wrong answer)."""
     import pytest as _pytest
 
     from amsterdam_map_data_wrangling_spark.sources.fs import pyarrow_fs_for
@@ -296,13 +235,10 @@ def test_file_uri_with_remote_authority_fails_safe(tmp_path):
 
 
 def test_azure_schemes_resolve_or_are_documented():
-    """r17 ADVICE follow-through, verified empirically: pyarrow 16.1's
-    ``FileSystem.from_uri`` dispatches ``abfs://``/``abfss://`` to
-    AzureFileSystem NATIVELY (no rewrite needed — construction-only,
-    no credentials touched), so probes on ADLS tables resolve instead
-    of silently answering None. The legacy blob-endpoint schemes
-    (wasb/wasbs) stay unmapped by design — documented in
-    hadoop_to_pyarrow_uri's docstring, and their probes fail safe."""
+    """``FileSystem.from_uri`` dispatches ``abfs://``/``abfss://`` to
+    AzureFileSystem with no rewrite (construction only, no credentials
+    touched); the legacy wasb/wasbs schemes stay unmapped and their
+    probes fail safe."""
     from amsterdam_map_data_wrangling_spark.sources.fs import (
         hadoop_to_pyarrow_uri,
         pyarrow_fs_for,
@@ -322,29 +258,12 @@ def test_azure_schemes_resolve_or_are_documented():
 
 
 def test_probe_true_get_accounting_is_bounded(tmp_path):
-    """r18 catalog-latency axis: with post-open reads intercepted (the
-    GETs a store actually bills), each footer probe costs a BOUNDED
-    number of billable calls — measured 2/footer (1 open + 1 tail read)
-    + 2 fixed (stat + selector) — and the fan-out pool does not change
-    the count. Asserted as a bound (<= 4/footer + 4 fixed), not
-    pyarrow's exact internal pattern (r17 ADVICE). The budget wall this
-    implies at 50 ms/GET is why PROBE_FANOUT is 32: 256 files x 2 GETs
-    / 32-wide ~= 1.0 s, under the ~2 s smallest plan delta; 16-wide
-    measured 1.74 s — only ~13% headroom
-    (scripts/catalog_latency.py, scripts/archive/catalog_latency_r18)."""
-    import importlib.util
-    import os as _os
-
-    spec = importlib.util.spec_from_file_location(
-        "catalog_latency",
-        _os.path.join(
-            _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-            "scripts",
-            "catalog_latency.py",
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    """With post-open reads intercepted (the GETs a store bills), each
+    footer probe costs a bounded number of calls — measured 2/footer
+    (open + tail read) + 2 fixed (stat + selector) — whatever the
+    fan-out. Asserted as a bound (<= 4/footer + 4 fixed), not pyarrow's
+    exact internal pattern."""
+    mod = _latency_script()
 
     from pyarrow import fs as pafs
 
@@ -370,6 +289,5 @@ def test_probe_true_get_accounting_is_bounded(tmp_path):
         finally:
             fsmod.PROBE_FANOUT = old
         assert handler.total_calls <= 4 * n + 4, handler.calls
-        # reads ARE intercepted (walls under this handler are true
-        # per-GET accounting, not the r17 lower bound)
+        # reads ARE intercepted (true per-GET accounting)
         assert handler.calls.get("read", 0) >= n

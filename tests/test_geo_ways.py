@@ -106,13 +106,9 @@ def test_geo_way_lengths_plan_one_way_shuffle_topk(spark):
 
 
 def test_geo_nn_repartition_row_count_window(spark, tmp_path):
-    """geo_nn_on_sphere's probe-side cell repartition is gated on the
-    footer ROW COUNT (the candidate fan-out is quadratic in rows, not
-    bytes — r18): below 50k points the exchange's fixed cost exceeds
-    its benefit and the plan must skip it; at/above 50k (the r11 sf1
-    wall was 150k) it must fire. Both regimes pinned so neither the
-    small-corpus exchange nor the large-corpus single-task emission
-    can silently return."""
+    """geo_nn_on_sphere's probe-side cell repartition follows the footer
+    ROW COUNT (operators/layout.fanout_partitions): skipped below 50k
+    points, fired at 60k. Both regimes pinned in the built plan."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

@@ -315,13 +315,19 @@ def test_bit_reader_accumulator_stays_bounded():
 
 
 def test_jpeg_row_count_parallelism_window(spark, tmp_path):
-    """r19: the JPEG kernel costs ~130 us/row of Python, so the plan
-    inserts a rows-sized repartition when the input is under the
-    loader's byte floor but has enough rows to amortize the exchange.
-    Pin both regimes and the rows-based task sizing."""
+    """The JPEG kernel costs ~130 us/row of Python, so the plan inserts
+    a rows-sized repartition when the input is under the loader's byte
+    floor but has enough rows to amortize the exchange. Pin the three
+    regimes and the task sizing: rows // 500, capped at the cluster
+    width."""
+    import re
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from amsterdam_map_data_wrangling_spark.operators.layout import (
+        KERNEL_ROWS_PER_TASK,
+    )
     from amsterdam_map_data_wrangling_spark.plans.queries import QUERIES
 
     # small regime: sf0.01 (500 rows, < 2000) — no repartition
@@ -335,7 +341,8 @@ def test_jpeg_row_count_parallelism_window(spark, tmp_path):
     assert "RepartitionByExpression" not in plan_small
 
     # firing regime: sf0.1 (5000 rows, 0.6 MB < 4 MiB byte floor) —
-    # hash repartition on doc_id, sized rows // 500 (= 10), not cores
+    # hash repartition on doc_id, sized rows // 500 (= 10) and capped
+    # at the cluster width
     plan_big = (
         QUERIES["jpeg_pixel_stats"]
         .build(spark, "/root/testdata/sf0.1")
@@ -343,8 +350,11 @@ def test_jpeg_row_count_parallelism_window(spark, tmp_path):
         .optimizedPlan()
         .toString()
     )
-    assert "RepartitionByExpression [doc_id" in plan_big
-    assert ", 10" in plan_big  # 5000 rows // 500
+    parts = re.findall(
+        r"RepartitionByExpression \[doc_id#\d+L?\], (\d+)", plan_big
+    )
+    width = spark.sparkContext.defaultParallelism
+    assert parts == [str(min(width, 5000 // KERNEL_ROWS_PER_TASK))]
 
     # above the byte floor the loader already spread the scan: a
     # synthetic 3000-row doc table padded past 4 MiB must NOT get the

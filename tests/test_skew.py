@@ -321,19 +321,18 @@ def test_chunked_levers_keep_null_key_rows(spark):
 def test_null_adaptive_window_plans_match_oracle_on_half_null_corpus(
     spark, tmp_path
 ):
-    """r15 high-null closure: gap_sessionization and event_gap_stats
-    pick the chunked window plan when the parquet footers report a
-    NULL-heavy key (>=10%); on a half-null corpus both must stay green
-    against their UNCHANGED DuckDB oracles (which replay the naive
-    idiom, NULL keys grouped like any other key)."""
+    """The four key-density plans take their chunked twin on a
+    half-null corpus and must stay green against their UNCHANGED DuckDB
+    oracles (which replay the naive idiom, NULL keys grouped like any
+    other key)."""
     import datetime
 
     import duckdb
     from pyspark.sql import functions as F
 
     from amsterdam_map_data_wrangling_spark.plans.catalog import QUERIES
-    from amsterdam_map_data_wrangling_spark.plans.text import (
-        _parquet_col_null_frac,
+    from amsterdam_map_data_wrangling_spark.sources.fs import (
+        parquet_col_null_frac,
     )
 
     t0 = datetime.datetime(2024, 3, 1, tzinfo=datetime.timezone.utc)
@@ -351,7 +350,7 @@ def test_null_adaptive_window_plans_match_oracle_on_half_null_corpus(
     )
     sf = tmp_path / "nullev"
     df.write.mode("overwrite").parquet(str(sf / "events.parquet"))
-    nf = _parquet_col_null_frac(str(sf / "events.parquet"), "user_id")
+    nf = parquet_col_null_frac(str(sf / "events.parquet"), "user_id")
     assert nf is not None and nf > 0.4, "footer probe must see the nulls"
 
     con = duckdb.connect()
